@@ -24,10 +24,13 @@ an anti-join (R15).
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ecmm428_pycart_spark.geometry import core
 from ecmm428_pycart_spark.geometry.udfs import st_shared_border_length, st_vertices
 
 # Vertices are matched after rounding to this many decimals; GeoJSON/WKT
@@ -50,6 +53,17 @@ def with_region_idx(df: DataFrame, id_field: str,
         return df.withColumn("region_idx", F.col(idx_field).cast("long"))
     w = W.orderBy(F.col(id_field))
     return df.withColumn("region_idx", F.row_number().over(w).cast("long") - 1)
+
+
+def region_index(keys) -> np.ndarray:
+    """``with_region_idx(df, id_field)`` over one local column of keys:
+    each row's 0-based position in ascending key order, nulls first
+    (Spark's ascending default), ties in arrival order."""
+    order = (pd.Series(keys).reset_index(drop=True)
+             .sort_values(kind="stable", na_position="first").index)
+    idx = np.empty(len(order), dtype="i8")
+    idx[order.to_numpy()] = np.arange(len(order))
+    return idx
 
 
 def queen_neighbors(regions: DataFrame, geo_field: str = "geometry") -> DataFrame:
@@ -80,6 +94,34 @@ def queen_neighbors(regions: DataFrame, geo_field: str = "geometry") -> DataFram
         .filter(F.col("focal") != F.col("neighbor"))
         .distinct()
     )
+
+
+def queen_borders(geoms):
+    """``get_borders(...)[0]`` over local parsed geometries listed in
+    region-index order: directed (focal, neighbor, weight) arrays of list
+    positions, sorted by (focal, neighbor).
+
+    Two regions are Queen neighbours iff they share a vertex after
+    rounding to ``_VERTEX_DECIMALS`` (numpy's half-even rounding; it can
+    group differently from Spark's half-up ``round`` only for distinct
+    vertices less than 1e-9 apart). The weight is
+    ``core.shared_boundary_length`` of the lower-index geometry against
+    the higher, mirrored — the argument order get_borders uses, so the
+    weights are the same doubles."""
+    owners: dict[tuple, set] = {}
+    for r, g in enumerate(geoms):
+        for v in map(tuple, np.round(core.vertices(g), _VERTEX_DECIMALS)
+                     .tolist()):
+            owners.setdefault(v, set()).add(r)
+    und = {(i, j) for rs in owners.values() for i in rs for j in rs if i < j}
+    a, b = np.array(list(und), dtype="i8").reshape(-1, 2).T
+    w = np.array([core.shared_boundary_length(geoms[i], geoms[j])
+                  for i, j in zip(a, b)], dtype="f8")
+    focal = np.concatenate([a, b])
+    neighbor = np.concatenate([b, a])
+    weight = np.concatenate([w, w])
+    o = np.lexsort((neighbor, focal))
+    return focal[o], neighbor[o], weight[o]
 
 
 def get_borders(regions: DataFrame, id_field: str,

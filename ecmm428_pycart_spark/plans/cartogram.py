@@ -10,9 +10,13 @@ constructor (pycart/cartogram.py:142-170) and exposes:
   (pycart/cartogram.py:245-414) in two execution modes:
 
   * ``mode='reference'`` — exact parity with the reference's sequential
-    Gauss–Seidel sweep (SURVEY.md Q1) via a single-group applyInPandas.
-    Bounded by one executor (fine: reference workloads are ≤ ~400
-    regions; the setup joins/aggregations are still distributed).
+    Gauss–Seidel sweep (SURVEY.md Q1). The whole mode — region index,
+    Queen borders, centroids, perimeters, radius calibration and the
+    sweep — runs as ONE single-group applyInPandas task
+    (``dorling_core.reference_layout``), collected when called: no
+    distributed setup; two Spark jobs per call (three with ``borders``)
+    and one more to read the circle polygons. Bounded by one executor
+    (fine: reference workloads are ≤ ~400 regions).
   * ``mode='scalable'`` — synchronous Jacobi iteration: grid-bucket
     distance join + native-column force math + groupBy(focal) agg per
     step, localCheckpoint each iteration to truncate lineage. Safe at
@@ -25,7 +29,6 @@ from __future__ import annotations
 import math
 import os
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -37,7 +40,8 @@ from ecmm428_pycart_spark.geometry.udfs import (
     st_perimeter,
     st_scale_about_centroid,
 )
-from ecmm428_pycart_spark.operators.borders import get_borders, with_region_idx
+from ecmm428_pycart_spark.operators.borders import (get_borders, region_index,
+                                                    with_region_idx)
 from ecmm428_pycart_spark.operators.spatial_join import distance_range_self_join
 from ecmm428_pycart_spark.plans import dorling_core
 
@@ -61,6 +65,13 @@ def _ckpt(df: DataFrame) -> DataFrame:
     per-stage jobs (the A/B arm)."""
     eager = os.environ.get("SPARK_GRAFT_DORLING_LAZYCKPT_OFF") == "1"
     return df.localCheckpoint(eager=eager)
+
+
+# no Queen edges at all (single region / all islands): the reference
+# divides by zero here (cartogram.py:335); we fail fast with this instead
+_NO_EDGES = ("dorling: no contiguity edges — every region is an island, "
+             "radius calibration k = D/R is undefined (reference would "
+             "raise ZeroDivisionError)")
 
 
 class Cartogram:
@@ -135,9 +146,10 @@ class Cartogram:
     # Dorling (A3)
     # ------------------------------------------------------------------
     def _dorling_setup(self, materialize_borders: bool = False):
-        """Shared setup (pycart/cartogram.py:308-341): borders, perimeters,
-        centroids, radius calibration k = ΣD/ΣR over the directed edge
-        list (SURVEY.md Q5), radii, widest.
+        """Distributed setup of the scalable mode and ``dorling_radii``
+        (pycart/cartogram.py:308-341): borders, perimeters, centroids,
+        radius calibration k = ΣD/ΣR over the directed edge list
+        (SURVEY.md Q5), radii, widest.
 
         Returns (state_df, borders_df, widest). state has columns
         region_idx, id, value, cx, cy, radius, perimeter.
@@ -145,7 +157,7 @@ class Cartogram:
         ``materialize_borders`` checkpoints the borders pipeline (vertex
         join + weight UDF) eagerly — pass True when borders will be
         re-consumed per iteration (scalable mode); the extra action is a
-        net loss for the one-shot consumers (radii, reference cogroup).
+        net loss for the one-shot ``dorling_radii``.
         """
         v, i, g = self.value_field, self.id_field, self.geo_field
         cols = [v, i, g]
@@ -198,13 +210,7 @@ class Cartogram:
             F.count(F.lit(1)).alias("_n"))
         row = sums.crossJoin(stats).collect()[0]
         if row["total_radius"] is None or float(row["total_radius"]) == 0.0:
-            # no Queen edges at all (single region / all islands): the
-            # reference divides by zero here (cartogram.py:335); fail fast
-            # with a diagnosable message instead
-            raise ValueError(
-                "dorling: no contiguity edges — every region is an island, "
-                "radius calibration k = D/R is undefined (reference would "
-                "raise ZeroDivisionError)")
+            raise ValueError(_NO_EDGES)
         k = float(row["total_distance"]) / float(row["total_radius"])
 
         state = regions.withColumn(
@@ -231,12 +237,11 @@ class Cartogram:
         and keeps only the last (Q2); we buffer once after the loop —
         identical result, O(n²·iters) fewer buffer calls.
         """
-        state, borders, widest = self._dorling_setup(
-            materialize_borders=(mode == "scalable"))
         if mode == "reference":
-            moved = self._dorling_reference(state, borders, widest,
-                                            iterations, ratio, friction, stop)
+            moved = self._dorling_fused(iterations, ratio, friction, stop)
         elif mode == "scalable":
+            state, borders, widest = self._dorling_setup(
+                materialize_borders=True)
             moved = self._dorling_scalable(state, borders, widest,
                                            iterations, ratio, friction, stop)
         else:
@@ -251,37 +256,56 @@ class Cartogram:
                     "region_idx", "cx", "cy", "radius", "geometry")
         )
 
-    def _dorling_reference(self, state, borders, widest,
-                           iterations, ratio, friction, stop):
-        """Exact-parity sequential sweep inside one cogrouped
-        applyInPandas (SURVEY.md §4.3.2 mode='reference')."""
+    def _dorling_fused(self, iterations, ratio, friction, stop):
+        """Reference mode as one task: a single-group applyInPandas over
+        the input rows (cogrouped with ``borders`` when given) runs
+        ``dorling_core.reference_layout``. Its ≤ hundreds of rows are
+        collected here so an all-islands map fails at call time; the
+        result is returned as a local DataFrame."""
+        v, i, g = self.value_field, self.id_field, self.geo_field
+        by_idx = self.idx_field is not None
+        key = F.col(self.idx_field).cast("long") if by_idx else F.col(i)
+        rows = self.df.select(
+            key.alias("_key"), F.col(i).cast("string").alias("_id"),
+            F.col(v).cast("double").alias("_value"),
+            F.col(g).alias("_geom"), F.lit(1).alias("_g"))
         out_schema = ("region_idx long, _id string, _value double, "
-                      "cx double, cy double, radius double, perimeter double")
+                      "cx double, cy double, radius double")
 
-        def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-            pdf = left.sort_values("region_idx").reset_index(drop=True)
-            # region_idx → dense array position
-            posmap = {int(r): p for p, r in enumerate(pdf["region_idx"])}
-            bf = right["focal"].map(posmap).to_numpy()
-            bn = right["neighbor"].map(posmap).to_numpy()
-            x, y = dorling_core.dorling_sweep(
-                pdf["cx"].to_numpy(), pdf["cy"].to_numpy(),
-                pdf["radius"].to_numpy(), pdf["perimeter"].to_numpy(),
-                bf, bn, right["weight"].to_numpy(),
-                iterations=iterations, ratio=ratio,
-                friction=friction, stop=stop)
-            pdf = pdf.copy()
-            pdf["cx"] = x
-            pdf["cy"] = y
-            return pdf[["region_idx", "_id", "_value", "cx", "cy",
-                        "radius", "perimeter"]]
+        def run(left, borders=None):
+            idx = (left["_key"].to_numpy() if by_idx
+                   else region_index(left["_key"]))
+            got = dorling_core.reference_layout(
+                idx, left["_value"], left["_geom"], borders=borders,
+                iterations=iterations, ratio=ratio, friction=friction,
+                stop=stop)
+            if got is None:
+                return pd.DataFrame(columns=["region_idx", "_id", "_value",
+                                             "cx", "cy", "radius"])
+            x, y, radius = got
+            return pd.DataFrame({"region_idx": idx, "_id": left["_id"],
+                                 "_value": left["_value"], "cx": x, "cy": y,
+                                 "radius": radius})
 
-        lhs = (state.withColumn("_value", F.col("_value").cast("double"))
-                    .withColumn("_id", F.col("_id").cast("string"))
-                    .withColumn("_g", F.lit(1)))
-        rhs = borders.select("focal", "neighbor", "weight").withColumn("_g", F.lit(1))
-        return (lhs.groupBy("_g").cogroup(rhs.groupBy("_g"))
-                .applyInPandas(run, schema=out_schema))
+        # one-argument lambda: applyInPandas reads a two-argument
+        # function as (key, pdf)
+        if self._borders is None:
+            out = rows.groupBy("_g").applyInPandas(
+                lambda left: run(left), schema=out_schema)
+        else:
+            rhs = (self._borders.select("focal", "neighbor", "weight")
+                   .withColumn("_g", F.lit(1)))
+            out = rows.groupBy("_g").cogroup(rhs.groupBy("_g")).applyInPandas(
+                lambda left, right: run(left, (right["focal"],
+                                               right["neighbor"],
+                                               right["weight"])),
+                schema=out_schema)
+        # Arrow both ways: a local frame built from pandas is ~6x faster
+        # to read back than one built from collected Rows
+        pdf = out.toPandas()
+        if pdf.empty:
+            raise ValueError(_NO_EDGES)
+        return self.df.sparkSession.createDataFrame(pdf, out_schema)
 
     def _dorling_scalable(self, state, borders, widest,
                           iterations, ratio, friction, stop):

@@ -10,14 +10,74 @@ _repel :35-77 and _attract :80-138) including its quirks (SURVEY.md §2.5):
 - Q4 clamp arithmetic, including the `+ 1.0` damping denominators.
 - Q6 `stop` breaks at the start of iteration `i == stop`.
 
-This function is driver-free (plain numpy) so it can run inside a
+These functions are driver-free (plain numpy) so they can run inside a
 single-group applyInPandas for the exact-parity mode, and be unit-tested
-without a SparkSession.
+without a SparkSession. ``reference_layout`` is that mode end to end:
+Queen borders (``operators.borders.queen_borders``), centroids,
+perimeters, radius calibration and the sweep, all in one task.
 """
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
+
+from ecmm428_pycart_spark.geometry import core
+from ecmm428_pycart_spark.operators.borders import queen_borders
+
+
+def reference_layout(idx, values, wkbs, borders=None,
+                     iterations: int = 100, ratio: float = 0.4,
+                     friction: float = 0.5, stop: int | None = None):
+    """Reference-mode Dorling for one whole map, in one process
+    (pycart/cartogram.py:308-402).
+
+    ``idx`` holds each row's region index. ``borders`` is an optional
+    precomputed ``(focal, neighbor, weight)`` triple keyed by region
+    index; without it the Queen borders are found here. The
+    radius calibration k = ΣD/ΣR runs over the directed edge list
+    (SURVEY.md Q5), summed exactly (``math.fsum``) so that k does not
+    depend on the edge order.
+
+    Returns ``(cx, cy, radius)`` arrays aligned with the input rows, or
+    None when there are no Queen edges (every region an island: k is
+    undefined)."""
+    idx = np.asarray(idx, dtype="i8")
+    if not len(idx):
+        return None
+    order = np.argsort(idx, kind="stable")
+    sidx = idx[order]
+    geoms = [core.loads(bytes(wkbs[p])) for p in order]
+    if borders is None:
+        bf, bn, bw = queen_borders(geoms)
+    else:
+        bf, bn = (_positions(sidx, c) for c in borders[:2])
+        bw = np.asarray(borders[2], dtype="f8")
+    cx, cy = np.array([core.centroid(g) for g in geoms], dtype="f8").T
+    perim = np.array([core.perimeter(g) for g in geoms], dtype="f8")
+    unit = np.sqrt(np.asarray(values, dtype="f8")[order] / math.pi)
+    total_radius = math.fsum(unit[bf] + unit[bn])
+    if total_radius == 0.0:
+        return None
+    k = math.fsum(np.hypot(cx[bn] - cx[bf], cy[bn] - cy[bf])) / total_radius
+    radius = unit * k
+    x, y = dorling_sweep(cx, cy, radius, perim, bf, bn, bw,
+                         iterations=iterations, ratio=ratio,
+                         friction=friction, stop=stop)
+    back = np.argsort(order)
+    return x[back], y[back], radius[back]
+
+
+def _positions(sorted_idx: np.ndarray, ids) -> np.ndarray:
+    """Positions of region indices ``ids`` in ``sorted_idx``; raises on
+    an index the map does not hold."""
+    ids = np.asarray(ids, dtype="i8")
+    pos = np.searchsorted(sorted_idx, ids).clip(max=len(sorted_idx) - 1)
+    if (sorted_idx[pos] != ids).any():
+        raise ValueError("dorling: borders name a region_idx that is not "
+                         "in the map")
+    return pos
 
 
 def dorling_sweep(x: np.ndarray, y: np.ndarray, radius: np.ndarray,
