@@ -2663,7 +2663,7 @@ def d37_bigram_lm(spark, sf_dir):
     # self-scoring against the full corpus: the count tables come from
     # the write-once lm_store (values identical to counting fresh)
     return text.bigram_lm_score(docs, counts=lm_store.count_tables(
-        spark, sf_dir, "documents", fresh_ref=docs))
+        spark, sf_dir, "documents"))
 
 
 # BM25 retrieval via the inverted-index join (Lucene idf form,

@@ -291,8 +291,7 @@ def g08_dorling_scalable_large(spark, sf_dir):
     # (the same derived dataset g02/g07/g10 read) instead of
     # re-running the vertex join + weight UDF per call — 1.8s -> 0.26s
     # for the borders subtree at 15k regions, store == fresh pinned
-    # row-for-row by tests/test_borders_store.py, and
-    # SPARK_GRAFT_BORDERS_STORE_OFF=1 falls back to the fresh build.
+    # row-for-row by tests/test_borders_store.py.
     cart = Cartogram(grid, "value", "region_idx", idx_field="region_idx",
                      borders=customer_borders(spark, sf_dir))
     out = cart.dorling(iterations=3, mode="scalable")
@@ -348,8 +347,7 @@ def g14_dorling_grid2500(spark, sf_dir):
     # r14: same borders-store lever as g08 — the fresh 2500-region
     # vertex join + weight UDF costs ~1.1s/call (measured); the store
     # read ~0.2s. Store == fresh pinned by
-    # tests/test_borders_store.py::test_orders_store_equals_fresh_build;
-    # SPARK_GRAFT_BORDERS_STORE_OFF=1 falls back to the fresh build.
+    # tests/test_borders_store.py::test_orders_store_equals_fresh_build.
     cart = Cartogram(grid, "value", "region_idx", idx_field="region_idx",
                      borders=orders2500_borders(spark, sf_dir))
     out = cart.dorling(iterations=3, mode="scalable")

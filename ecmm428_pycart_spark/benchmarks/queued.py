@@ -506,7 +506,7 @@ def d43_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # count tables from the write-once lm_store (exact-long counts —
     # scores bit-identical to counting fresh)
     return (perplexity_buckets(docs, counts=lm_store.count_tables(
-                spark, sf_dir, "documents", fresh_ref=docs))
+                spark, sf_dir, "documents"))
             .groupBy("bucket")
             .agg(F.count(F.lit(1)).alias("n_docs"),
                  F.round(F.avg("lm_bigram"), 6).alias("avg_lm")))
@@ -1233,11 +1233,10 @@ def q95_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
               .localCheckpoint(eager=True))
     # the LM count tables over the deduped corpus come from the
     # write-once lm_store (variant documents_dedup — the store derives
-    # the same exact-dedup survivors; fresh_ref reuses this checkpoint
-    # on the bypass path so the A/B's fresh arm is the pre-store plan)
+    # the same exact-dedup survivors)
     from ecmm428_pycart_spark.datapipe import lm_store
     keep = (perplexity_buckets(corpus, counts=lm_store.count_tables(
-                spark, sf_dir, "documents_dedup", fresh_ref=corpus))
+                spark, sf_dir, "documents_dedup"))
             .filter(F.col("bucket").isin("middle", "head"))
             .select("doc_id"))
     kept1 = corpus.join(keep, "doc_id", "left_semi")

@@ -2490,9 +2490,7 @@ def q133_crawl_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write-once extracted-corpus store (crawl_store.crawl_html): the
     # WARC/HTML Arrow pass runs once PER CORPUS, not once per query,
     # and the audit + filter branches read a doc_id-clustered scan.
-    # With the store bypassed the pass still runs once (checkpointed).
-    corpus = crawl_store.crawl_html(spark, sf_dir,
-                                    checkpoint_if_fresh=True)
+    corpus = crawl_store.crawl_html(spark, sf_dir)
     audit = (corpus.groupBy("source")
              .agg(F.count(F.lit(1)).alias("n_fetched"),
                   F.sum("n_records").cast("long").alias("warc_records"),

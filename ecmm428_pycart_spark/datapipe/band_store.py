@@ -1,108 +1,42 @@
-"""Write-once materialized store for the MinHash/LSH band index —
-the third derived-dataset store (after ``borders_store`` and
-``crawl_store``), landing VERDICT r10 next-4.
+"""The MinHash/LSH band index, served from the write-once store
+(``datapipe/store.py``); ``candidate_pairs`` is the drop-in for
+``dedup.lsh_candidate_pairs`` its consumers (d06/d15/d18/d19/d70/d95/
+q133/q136) call.
 
-Eight registered queries each re-run the SAME corpus-linear MinHash
-pass before doing any of their own work: shingle-explode every
-document, take 8 md5-min aggregates per doc, and re-band the
-signatures into (band, band_key) bucket keys —
-``dedup.minhash_signature`` → ``dedup.lsh_band_keys`` inside
-``dedup.lsh_candidate_pairs``. The consumers are d06/d15/d18/d70/d95
-(full ``documents``), d19/q136 (filtered subsets of ``documents``),
-and q133 (a filtered subset of the crawl store's extracted corpus).
-
-At 100 TB you hash and band the corpus ONCE and land the index as a
-columnar table — exactly what ``dedup.save_band_index``
-(`dedup.py:513`) already provides for the incremental-ingestion path;
-this module gives the same artifact a write-once, content-keyed store
-so every batch consumer starts from a scan too. The reference's
-analogue is ``pycart/border_util.py:51,77`` (derive-per-call — right
-for an 852-line single-node library, wrong at cluster scale).
-
-Key design point — the stored rows are the PRE-CAP band index:
-
-- ``(doc_id, band, band_key)`` is a PURE PER-DOCUMENT function of the
-  document text (shingle set → 8 MinHashes → 4 band keys), so one
-  full-corpus build serves every consumer regardless of which subset
-  it dedups: subset consumers semi-join the index down to their
-  surviving doc_ids.
-- The degenerate-bucket cap (> ``MAX_BUCKET_SIZE`` members in one
-  (band, band_key)) is CORPUS-DEPENDENT — a bucket over-full in the
-  full corpus may be fine within a filtered subset — so it is applied
-  at READ over the subsetted index (a cheap aggregate over n_docs x 4
-  tiny rows), which reproduces ``lsh_candidate_pairs(subset)``
-  exactly. (``save_band_index`` caps at build because its consumer,
-  incremental probing, always probes the full corpus.)
-
-Store contract (same protocol as ``crawl_store``):
-
-- one parquet table per (layout version, producing-code hash, corpus
-  fingerprint, variant), variant in {``documents``, ``crawl_html``};
-  the crawl_html variant's key also folds in the crawl store's own
-  producing-code hash, since the banded text is its extraction's
-  output.
-- ATOMIC, race-safe builds: writers build into a uuid tmp dir and
-  ``os.rename`` into place; a lost race cleans its tmp dir and reads
-  the winner.
-- Correctness contract: ``candidate_pairs(...)`` returns EXACTLY the
-  rows ``dedup.lsh_candidate_pairs`` returns on the same input
-  (pinned by tests/test_band_store.py), so every consumer's oracle is
-  unchanged.
-
-Set ``SPARK_GRAFT_BAND_STORE_OFF=1`` to bypass the store (fresh
-per-query hashing — the A side of docs/AB_BANDS_r11.md);
-``SPARK_GRAFT_BAND_STORE`` overrides the store root (default
-``<repo>/out/band_store``).
+- Stored: the PRE-CAP index (doc_id, band, band_key) of a variant's
+  full corpus — ``documents`` or ``crawl_html`` (the crawl store's
+  extracted text). Band keys are a pure per-document function of the
+  text (shingle set -> 8 MinHashes -> 4 band keys), so one build
+  serves every subset: consumers semi-join the index down to their
+  doc_ids. The degenerate-bucket cap depends on the population, so
+  it is applied at read over the subset, which reproduces
+  ``lsh_candidate_pairs(subset)`` exactly.
+- Fingerprint: the crawl store's ``documents`` fingerprint. The
+  producing-code hash covers the tokenizer, shingling, MinHash and
+  banding kernels, their constants and the fresh builder; the
+  ``crawl_html`` variant also folds in the crawl store's hash
+  (``-c<crawl algo>``).
+- Layout: doc_id-hashed, doc_id-sorted files, counted like the crawl
+  store's.
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecmm428_pycart_spark.datapipe import crawl_store, dedup
+from ecmm428_pycart_spark.datapipe import crawl_store, dedup, store
 from ecmm428_pycart_spark.session import load_table
-
-_LAYOUT_VERSION = "v1"
-_ALGO_MEMO: list[str] = []
 
 _VARIANTS = ("documents", "crawl_html")
 
 
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_BAND_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "band_store")
-
-
-def _algo_version() -> str:
-    """Hash of the SOURCE of everything that determines the stored
-    rows: the shingle/tokenize helpers, the MinHash and banding
-    kernels, their constants, and this module's builder. Any edit to
-    the hashing pipeline changes the key, so stale entries can never
-    serve silently (the ADVICE r9 staleness class). ``text.tokens`` is
-    included explicitly: ``shingle_set`` calls it, so a tokenizer edit
-    changes the stored band keys (ADVICE r11 — without this the
-    documents variant would serve stale; crawl_html was only
-    incidentally protected via the ``-c{crawl_algo}`` fold)."""
-    if not _ALGO_MEMO:
-        src = "\n".join(_algo_sources())
-        _ALGO_MEMO.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO[0]
-
-
 def _algo_sources() -> list[str]:
-    """The source list `_algo_version` hashes (split out so tests can
-    pin that every upstream dependency participates in the key)."""
+    """The producing code the entry key hashes: every upstream kernel
+    of the stored band keys, including the tokenizer ``shingle_set``
+    calls."""
     from ecmm428_pycart_spark.datapipe.text import tokens
 
     return [
@@ -118,14 +52,9 @@ def _algo_sources() -> list[str]:
 def _base_corpus(spark: SparkSession, sf_dir: str,
                  variant: str) -> DataFrame:
     """The (doc_id, text) corpus a variant bands over."""
-    if variant == "documents":
-        return load_table(spark, sf_dir, "documents").select(
-            "doc_id", "text")
     if variant == "crawl_html":
-        return crawl_store.crawl_html(spark, sf_dir).select(
-            "doc_id", "text")
-    raise ValueError(f"unknown band-store variant {variant!r}; "
-                     f"expected one of {_VARIANTS}")
+        return crawl_store.crawl_html(spark, sf_dir).select("doc_id", "text")
+    return load_table(spark, sf_dir, "documents").select("doc_id", "text")
 
 
 def _fresh_bands(spark: SparkSession, sf_dir: str,
@@ -137,55 +66,26 @@ def _fresh_bands(spark: SparkSession, sf_dir: str,
         dedup.minhash_signature(_base_corpus(spark, sf_dir, variant)))
 
 
-def _entry_key(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    algo = _algo_version()
-    if variant == "crawl_html":
-        # The banded text is the crawl extraction's OUTPUT: fold in
-        # that producing code's hash too, so an extractor edit
-        # invalidates this table as well as the crawl store's.
-        algo = f"{algo}-c{crawl_store._algo_version()}"
-    return (f"{_LAYOUT_VERSION}_{algo}"
-            f"_{crawl_store._fingerprint(spark, sf_dir)}_bands_{variant}")
+TABLES = {
+    "documents": store.Table("band", _algo_sources, "bands_documents"),
+    "crawl_html": store.Table("band", _algo_sources, "bands_crawl_html",
+                              fold=crawl_store.TABLES["html"]),
+}
 
 
 def band_index(spark: SparkSession, sf_dir: str,
                variant: str = "documents") -> DataFrame:
-    """The corpus's pre-cap LSH band index (doc_id, band, band_key),
-    from the write-once store; values identical to hashing fresh."""
-    if variant not in _VARIANTS:
+    """The corpus's pre-cap LSH band index (doc_id, band, band_key);
+    values identical to ``_fresh_bands``."""
+    if variant not in TABLES:
         raise ValueError(f"unknown band-store variant {variant!r}; "
                          f"expected one of {_VARIANTS}")
-    if _off():
-        return _fresh_bands(spark, sf_dir, variant)
-    final = os.path.join(_store_root(), _entry_key(spark, sf_dir, variant))
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (_fresh_bands(spark, sf_dir, variant)
-             # doc_id-clustered layout, file count scaled with corpus
-             # size (the local stand-in for bucketBy(doc_id) into a
-             # catalog table at cluster scale)
-             .repartition(crawl_store._layout_files(spark, sf_dir),
-                          "doc_id")
-             .sortWithinPartitions("doc_id")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's table; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (ADVICE r11)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
-
-
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_BAND_STORE_OFF") == "1"
+    path = store.materialize(
+        TABLES[variant], crawl_store.fingerprint(spark, sf_dir),
+        lambda tmp: store.write_clustered(
+            _fresh_bands(spark, sf_dir, variant), tmp,
+            crawl_store._layout_files(spark, sf_dir), "doc_id"))
+    return spark.read.parquet(path)
 
 
 def candidate_pairs(spark: SparkSession, sf_dir: str,
@@ -213,11 +113,6 @@ def candidate_pairs(spark: SparkSession, sf_dir: str,
     consumer must call ``dedup.lsh_candidate_pairs(transformed)``
     directly instead (ADVICE r11).
     """
-    if _off():
-        base = docs if docs is not None else _base_corpus(
-            spark, sf_dir, variant)
-        return dedup.lsh_candidate_pairs(
-            base, max_bucket_size=max_bucket_size)
     bands = band_index(spark, sf_dir, variant)
     if docs is not None:
         bands = bands.join(docs.select("doc_id"), "doc_id", "left_semi")

@@ -1,131 +1,61 @@
-"""Write-once materialized store for the customer-grid borders graph.
+"""Queen-borders edge tables of the benchmark grids, served from the
+write-once store (``datapipe/store.py``).
 
-Round-9 performance program (VERDICT r8 next-4): the heaviest registry
-queries (g10 pagerank, g17 k-core, g19 LPA, g22 PPR, g29 HITS, g31
-modularity) all derive the SAME dataset before doing any of their own
-work — the queen-contiguity borders of the customer unit grid
-(``geo_queries._customer_grid`` → ``operators.borders.get_borders``).
-That build is three Arrow-UDF stages (WKT→WKB parse, vertex explode,
-shared-border-length weight) plus a vertex-keyed shuffle, repeated
-identically per query.
-
-The reference has the same derived dataset: ``pycart/border_util.py:51,77``
-computes the borders list once per ``dorling()`` call — the right call
-for an 852-line single-node library, and the wrong one at cluster
-scale. At 100 TB you materialize the derived edge table once, lay it
-out by node id, and every downstream graph job starts from a columnar
-scan instead of re-running geometry. This module is that move:
-
-- ``customer_borders(spark, sf_dir)`` returns ``get_borders``' exact
-  output (focal, neighbor, weight, focal_id, neighbor_id) for the
-  customer grid at ``sf_dir``, served from a parquet store that is
-  built at most once per (store layout version, customer-table
-  fingerprint). Files are repartitioned + sorted by ``focal`` so a
-  downstream node-keyed consumer reads node-clustered row groups (the
-  single-JVM stand-in for ``bucketBy(focal)`` into a catalog table,
-  which is the cluster deployment — local gate runs must not depend
-  on a Hive metastore the driver's plain session may not have).
-- The build is ATOMIC and race-safe: writers build into a uuid tmp
-  dir and ``os.rename`` it into place; on a lost race the loser
-  removes its tmp dir and reads the winner's table. Two concurrent
-  gate JVMs at the same sf never see a partial store.
-- Correctness contract: the store holds EXACTLY the fresh build's
-  rows (a deterministic edge SET for a given customer table — pinned
-  by tests/test_borders_store.py), so every consumer's oracle is
-  unchanged. The fingerprint (count + min/max + order-insensitive
-  sum/bit_xor digest of custkey) keys the store to the data, not the
-  path, so a regenerated sf dir re-materializes; the key also folds in
-  a hash of the producing code's source (_algo_version), so editing
-  get_borders/_customer_grid/geometry invalidates old store entries
-  instead of silently serving stale edges.
-
-Set ``SPARK_GRAFT_BORDERS_STORE_OFF=1`` to bypass the store (fresh
-per-query build — the A side of docs/AB_BORDERS_r9.md);
-``SPARK_GRAFT_BORDERS_STORE`` overrides the store root (default
-``<repo>/out/borders_store``).
+- Stored: ``get_borders(grid, "region_idx", "geometry",
+  idx_field="region_idx")[0]`` — (focal, neighbor, weight, focal_id,
+  neighbor_id), both edge directions — for the customer grid
+  (``geo_queries._customer_grid``, read by g02/g07/g08/g10 and the
+  graph queries) and the 50x50 orders grid (``_orders_grid``, g14).
+- Fingerprint: count, min, max, sum and bit_xor of the grid's region
+  ids — ``c_custkey`` (tag ``c``) and the distinct ``o_orderkey % 2500``
+  cells (tag ``o``). The producing-code hash covers the grid builder,
+  ``operators.borders``, the geometry modules and the fresh builder.
+- Layout: 8 focal-hashed files with focal-sorted row groups, so a
+  node-keyed consumer reads node-clustered data.
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecmm428_pycart_spark.datapipe import store
 from ecmm428_pycart_spark.session import load_table
 
-_LAYOUT_VERSION = "v1"
-# fingerprint of c_custkey per sf_dir, memoized per process so repeated
-# calls in one gate/bench session pay the fingerprint agg once
-_FP_MEMO: dict[str, tuple[int, int, int, str]] = {}
-_ALGO_MEMO: list[str] = []
 
-
-def _algo_version() -> str:
-    """Hash of the SOURCE of everything that determines the store's
-    contents (ADVICE r9, medium): _customer_grid, the borders operator
-    module, the geometry modules it calls, and _fresh_borders itself.
-    Any edit to the producing code changes the store key, so a stale
-    table built by older code can never be served silently."""
-    if not _ALGO_MEMO:
-        from ecmm428_pycart_spark.benchmarks import geo_queries
-        from ecmm428_pycart_spark.geometry import core as geo_core
-        from ecmm428_pycart_spark.geometry import udfs as geo_udfs
-        from ecmm428_pycart_spark.operators import borders as borders_op
-
-        src = "\n".join([
-            inspect.getsource(geo_queries._customer_grid),
-            inspect.getsource(borders_op),
-            inspect.getsource(geo_udfs),
-            inspect.getsource(geo_core),
-            inspect.getsource(_fresh_borders),
-        ])
-        _ALGO_MEMO.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO[0]
-
-
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_BORDERS_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "borders_store")
-
-
-def _fingerprint(spark: SparkSession, sf_dir: str) -> tuple[int, int, int, str]:
-    """(count, min, max, key-set digest) of c_custkey. The digest is an
-    order-insensitive sum + bit_xor of the keys (ADVICE r9, low): two
-    customer tables with equal count/min/max but different key SETS
-    (e.g. {1,2,4,5} vs {1,3,4,5}) no longer collide onto one store."""
-    key = os.path.abspath(sf_dir)
-    if key not in _FP_MEMO:
-        row = (load_table(spark, sf_dir, "customer")
-               .select(F.col("c_custkey").cast("long").alias("k"))
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.min("k").alias("lo"),
-                    F.max("k").alias("hi"),
-                    F.sum("k").alias("s"),
-                    F.expr("bit_xor(k)").alias("x")).collect()[0])
-        digest = hashlib.sha256(
-            f"{row['s']}_{row['x']}".encode()).hexdigest()[:10]
-        _FP_MEMO[key] = (int(row["n"]), int(row["lo"]), int(row["hi"]),
-                         digest)
-    return _FP_MEMO[key]
-
-
-def _fresh_borders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ecmm428_pycart_spark.benchmarks.geo_queries import _customer_grid
+def _fresh_borders(spark: SparkSession, sf_dir: str,
+                   grid: str = "_customer_grid") -> DataFrame:
+    from ecmm428_pycart_spark.benchmarks import geo_queries
     from ecmm428_pycart_spark.operators.borders import get_borders
 
-    grid = _customer_grid(spark, sf_dir).drop("value")
-    borders, _ = get_borders(grid, "region_idx", "geometry",
-                             idx_field="region_idx")
-    return borders
+    cells = getattr(geo_queries, grid)(spark, sf_dir).drop("value")
+    return get_borders(cells, "region_idx", "geometry",
+                       idx_field="region_idx")[0]
+
+
+def _sources(grid: str) -> list[str]:
+    from ecmm428_pycart_spark.benchmarks import geo_queries
+    from ecmm428_pycart_spark.geometry import core as geo_core
+    from ecmm428_pycart_spark.geometry import udfs as geo_udfs
+    from ecmm428_pycart_spark.operators import borders as borders_op
+
+    return [inspect.getsource(m) for m in (
+        getattr(geo_queries, grid), borders_op, geo_udfs, geo_core,
+        _fresh_borders)]
+
+
+CUSTOMER = store.Table("borders", lambda: _sources("_customer_grid"))
+ORDERS = store.Table("borders", lambda: _sources("_orders_grid"))
+
+
+def _served(spark: SparkSession, sf_dir: str, table: store.Table,
+            fingerprint: str, grid: str) -> DataFrame:
+    path = store.materialize(
+        table, fingerprint, lambda tmp: store.write_clustered(
+            _fresh_borders(spark, sf_dir, grid), tmp, 8, "focal"))
+    return spark.read.parquet(path)
 
 
 def customer_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -137,125 +67,19 @@ def customer_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def customer_borders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The customer-grid borders edge table, from the write-once store.
-
-    Schema and values are identical to
-    ``get_borders(_customer_grid(...), "region_idx", "geometry",
-    idx_field="region_idx")[0]`` — columns (focal, neighbor, weight,
-    focal_id, neighbor_id), both edge directions present.
-    """
-    if os.environ.get("SPARK_GRAFT_BORDERS_STORE_OFF") == "1":
-        return _fresh_borders(spark, sf_dir)
-    n, lo, hi, digest = _fingerprint(spark, sf_dir)
-    final = os.path.join(
-        _store_root(),
-        f"{_LAYOUT_VERSION}_{_algo_version()}_c{n}_{lo}_{hi}_{digest}")
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (_fresh_borders(spark, sf_dir)
-             # node-clustered layout: focal-hashed files, focal-sorted
-             # row groups — the local stand-in for bucketBy(focal)
-             .repartition(8, "focal").sortWithinPartitions("focal")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent race (final now exists) — read the
-            # winner's table; anything else re-raises below on read
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (ADVICE r11)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
-
-
-# ---------------------------------------------------------------------
-# r14: second grid in the same store — the 50x50 orders grid g14 runs
-# its scalable dorling over. Same contract, key scheme, atomicity and
-# off-switch as the customer table; its algo version additionally
-# folds _orders_grid's source so editing the grid invalidates entries.
-# ---------------------------------------------------------------------
-_FP_MEMO_O: dict[str, tuple[int, int, int, str]] = {}
-_ALGO_MEMO_O: list[str] = []
-
-
-def _algo_version_orders() -> str:
-    if not _ALGO_MEMO_O:
-        from ecmm428_pycart_spark.benchmarks import geo_queries
-        from ecmm428_pycart_spark.geometry import core as geo_core
-        from ecmm428_pycart_spark.geometry import udfs as geo_udfs
-        from ecmm428_pycart_spark.operators import borders as borders_op
-
-        src = "\n".join([
-            inspect.getsource(geo_queries._orders_grid),
-            inspect.getsource(borders_op),
-            inspect.getsource(geo_udfs),
-            inspect.getsource(geo_core),
-            inspect.getsource(_fresh_orders2500_borders),
-        ])
-        _ALGO_MEMO_O.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO_O[0]
-
-
-def _fingerprint_orders(spark: SparkSession, sf_dir: str
-                        ) -> tuple[int, int, int, str]:
-    """Fingerprint of the DISTINCT o_orderkey % 2500 key set — the
-    grid's actual region ids (1,500 sparse cells at sf0.001, all 2,500
-    from sf0.01 up)."""
-    key = os.path.abspath(sf_dir)
-    if key not in _FP_MEMO_O:
-        row = (load_table(spark, sf_dir, "orders")
-               .select((F.col("o_orderkey") % 2500).cast("long").alias("k"))
-               .distinct()
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.min("k").alias("lo"),
-                    F.max("k").alias("hi"),
-                    F.sum("k").alias("s"),
-                    F.expr("bit_xor(k)").alias("x")).collect()[0])
-        digest = hashlib.sha256(
-            f"{row['s']}_{row['x']}".encode()).hexdigest()[:10]
-        _FP_MEMO_O[key] = (int(row["n"]), int(row["lo"]), int(row["hi"]),
-                           digest)
-    return _FP_MEMO_O[key]
-
-
-def _fresh_orders2500_borders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ecmm428_pycart_spark.benchmarks.geo_queries import _orders_grid
-    from ecmm428_pycart_spark.operators.borders import get_borders
-
-    grid = _orders_grid(spark, sf_dir).drop("value")
-    borders, _ = get_borders(grid, "region_idx", "geometry",
-                             idx_field="region_idx")
-    return borders
+    """The customer-grid borders edge table; rows identical to
+    ``_fresh_borders``."""
+    fp = store.fingerprint("c", sf_dir, lambda: customer_nodes(
+        spark, sf_dir).select(F.col("region_idx").alias("k"),
+                              F.col("region_idx").alias("c")))
+    return _served(spark, sf_dir, CUSTOMER, fp, "_customer_grid")
 
 
 def orders2500_borders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The orders-grid (50x50) borders edge table, from the write-once
-    store. Schema and values identical to
-    ``get_borders(_orders_grid(...), "region_idx", "geometry",
-    idx_field="region_idx")[0]``."""
-    if os.environ.get("SPARK_GRAFT_BORDERS_STORE_OFF") == "1":
-        return _fresh_orders2500_borders(spark, sf_dir)
-    n, lo, hi, digest = _fingerprint_orders(spark, sf_dir)
-    final = os.path.join(
-        _store_root(),
-        f"{_LAYOUT_VERSION}_{_algo_version_orders()}_o{n}_{lo}_{hi}_{digest}")
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (_fresh_orders2500_borders(spark, sf_dir)
-             .repartition(8, "focal").sortWithinPartitions("focal")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
+    """The orders-grid (50x50) borders edge table; rows identical to
+    ``_fresh_borders(spark, sf_dir, "_orders_grid")``."""
+    fp = store.fingerprint("o", sf_dir, lambda: load_table(
+        spark, sf_dir, "orders").select(
+            (F.col("o_orderkey") % 2500).cast("long").alias("k")).distinct()
+        .withColumn("c", F.col("k")))
+    return _served(spark, sf_dir, ORDERS, fp, "_orders_grid")

@@ -1,155 +1,57 @@
-"""Write-once materialized store for the crawl family's shared
-extraction passes.
+"""The crawl family's shared extraction passes, served from the
+write-once store (``datapipe/store.py``).
 
-Round-10 performance program (VERDICT r9 next-3 — the borders-store
-move, applied again): the crawl-macro queries each re-run the SAME
-corpus-linear Arrow extraction over ``documents`` before doing any of
-their own work:
-
-- q133 (crawl pipeline) and q137 (crawl search) both run the WARC
-  capture + ISO 28500 walk + stdlib-html.parser visible-text
-  extraction (``multimodal.synth_warc_html_payload`` →
-  ``multimodal.warc_html_extract``);
-- d93 (outlink graph), d94 (crawl frontier) and g41 (host PageRank)
-  each run the real href extraction (``text.outlink_host_edges``);
-- m52 (media dispatch) runs the WARC walk + magic-byte sniff +
-  mixed-media decode (``multimodal.synth_warc_media_payload`` →
-  ``multimodal.warc_media_extract``).
-
-The reference's analogue is the same one it has for borders
-(``pycart/border_util.py:51,77`` — derive once per call): right for an
-852-line single-node library, wrong at cluster scale. At 100 TB you
-run the CPU-linear decode ONCE, land the extracted corpus as a
-doc_id-clustered columnar table, and every downstream job (dedup,
-graph, retrieval, packing) starts from a scan — this is exactly what
-Common-Crawl-scale pipelines do (WARC → WET/WAT derived tables). This
-module is that move, with the same contract as
-``datapipe/borders_store.py``:
-
-- three derived tables per (layout version, producing-code hash,
-  documents fingerprint): ``html`` (doc_id, source, text, n_links,
-  n_records), ``links`` (doc_id, src_host, dst_host — one row per
-  extracted href), ``media`` (doc_id, source, media_type, n_units,
-  sum_val, n_records, n_responses). Each is built independently and
-  at most once, repartitioned + sorted by ``doc_id`` (the local
-  stand-in for ``bucketBy(doc_id)`` into a catalog table).
-- ATOMIC, race-safe builds: writers build into a uuid tmp dir and
-  ``os.rename`` into place; a lost race cleans its tmp dir and reads
-  the winner.
-- Correctness contract: each table holds EXACTLY the fresh
-  extraction's rows (pinned by tests/test_crawl_store.py), so every
-  consumer's oracle is unchanged. The store key folds in (a) an
-  order-insensitive content digest of ``documents`` (count + min/max
-  doc_id + sum/bit_xor of a per-row crc32 over doc_id|source|text),
-  so a regenerated or edited corpus re-materializes, and (b) a hash
-  of the producing code's source (the multimodal + text modules and
-  this module's builders), so editing any extractor invalidates old
-  entries instead of silently serving stale rows (the ADVICE r9
-  staleness class, closed here from day one).
-
-Set ``SPARK_GRAFT_CRAWL_STORE_OFF=1`` to bypass the store (fresh
-per-query extraction — the A side of docs/AB_CRAWL_r10.md);
-``SPARK_GRAFT_CRAWL_STORE`` overrides the store root (default
-``<repo>/out/crawl_store``).
+- Stored: three tables derived from ``documents``, each built
+  independently — ``html`` (doc_id, source, text, n_links, n_records;
+  the WARC capture + ISO 28500 walk + html.parser visible-text pass
+  q133/q137 read), ``links`` (doc_id, src_host, dst_host, one row per
+  extracted href; d93/d94/g41) and ``media`` (doc_id, source,
+  media_type, n_units, sum_val, n_records, n_responses; m52's WARC
+  walk + magic-byte sniff + mixed-media decode).
+- Fingerprint (tag ``d``, shared by ``band_store`` and ``lm_store``):
+  count and min/max doc_id of ``documents`` plus sum and bit_xor of a
+  per-row crc32 over a null-guarded, length-prefixed encoding of
+  (doc_id, source, text), so it pins content, not just the key range.
+  The producing-code hash covers the whole ``multimodal`` and ``text``
+  modules and the fresh builders.
+- Layout: doc_id-hashed files, doc_id-sorted, one file per ~50k docs
+  with a floor of 8 (``_layout_files``).
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
-import os
-import shutil
-import uuid
-from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ecmm428_pycart_spark.datapipe import store
 from ecmm428_pycart_spark.session import load_table
 
-_LAYOUT_VERSION = "v1"
-# content fingerprint of the documents table per sf_dir, memoized per
-# process so repeated calls in one gate/bench session pay it once
-_FP_MEMO: dict[str, str] = {}
-_ALGO_MEMO: list[str] = []
 
-
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_CRAWL_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "crawl_store")
-
-
-def _algo_version() -> str:
-    """Hash of the SOURCE of everything that determines the stored
-    rows: the whole multimodal module (WARC synth/walk, html
-    extraction, media decoders), the whole text module
-    (outlink_host_edges, html_to_text and their helpers), and this
-    module's fresh builders. Any extractor edit changes the key."""
-    if not _ALGO_MEMO:
-        from ecmm428_pycart_spark.datapipe import multimodal
-        from ecmm428_pycart_spark.datapipe import text as text_mod
-
-        src = "\n".join([
-            inspect.getsource(multimodal),
-            inspect.getsource(text_mod),
-            inspect.getsource(_fresh_html),
-            inspect.getsource(_fresh_links),
-            inspect.getsource(_fresh_media),
-        ])
-        _ALGO_MEMO.append(hashlib.sha256(src.encode()).hexdigest()[:12])
-    return _ALGO_MEMO[0]
-
-
-def _fingerprint(spark: SparkSession, sf_dir: str) -> str:
-    """Order-insensitive content digest of ``documents``: count +
-    min/max doc_id + sum and bit_xor of a per-row crc32 over an
-    INJECTIVE encoding of (doc_id, source, text). One cheap native
-    scan — far below the Arrow extraction it guards — and it pins the
-    CONTENT, not just the key range, so two corpora with equal shape
-    but different text never collide onto one store entry.
-
-    The per-row encoding is null-guarded and length-prefixed (ADVICE
-    r10): NULL encodes as ``~`` and a value as ``<len>:<value>``, so a
-    NULL source vs NULL text, or a ``|`` embedded in a field, can no
-    longer produce the digest another corpus produces (the old
-    ``concat_ws('|', ...)`` both dropped NULLs and left field
-    boundaries ambiguous)."""
+def fingerprint(spark: SparkSession, sf_dir: str) -> str:
+    """Content fingerprint of ``documents``: a NULL field encodes as
+    ``~`` and a value as ``<len>:<value>``, so neither a NULL in another
+    column nor an embedded separator can alias another corpus."""
 
     def _field(name: str):
         s = F.col(name).cast("string")
         return F.when(s.isNull(), F.lit("~")).otherwise(
             F.concat(F.length(s).cast("string"), F.lit(":"), s))
 
-    key = os.path.abspath(sf_dir)
-    if key not in _FP_MEMO:
-        row = (load_table(spark, sf_dir, "documents")
-               .select(F.col("doc_id").cast("long").alias("k"),
-                       F.crc32(F.concat(
-                           _field("doc_id"), _field("source"),
-                           _field("text"))).alias("c"))
-               .agg(F.count(F.lit(1)).alias("n"),
-                    F.min("k").alias("lo"),
-                    F.max("k").alias("hi"),
-                    F.sum("c").alias("s"),
-                    F.expr("bit_xor(c)").alias("x")).collect()[0])
-        digest = hashlib.sha256(
-            f"{row['s']}_{row['x']}".encode()).hexdigest()[:10]
-        _FP_MEMO[key] = f"d{row['n']}_{row['lo']}_{row['hi']}_{digest}"
-    return _FP_MEMO[key]
+    return store.fingerprint("d", sf_dir, lambda: load_table(
+        spark, sf_dir, "documents").select(
+            F.col("doc_id").cast("long").alias("k"),
+            F.crc32(F.concat(_field("doc_id"), _field("source"),
+                             _field("text"))).alias("c")))
 
 
 def _layout_files(spark: SparkSession, sf_dir: str) -> int:
-    """Store-table file count, scaled with corpus size (VERDICT r10
-    next-6): ~one file per 50k docs with a floor of 8, so a sim-sf1+
-    corpus keeps scan parallelism instead of funneling through a
-    fixed 8-file layout, while the small test corpora don't fragment
-    into thousands of tiny files. Derived from the fingerprint's row
-    count (``d<n>_...``), which is already memoized per sf_dir."""
-    n_docs = int(_fingerprint(spark, sf_dir).split("_")[0][1:])
+    """Store-table file count, scaled with corpus size: ~one file per
+    50k docs with a floor of 8, so a large corpus keeps scan
+    parallelism while small corpora don't fragment into tiny files.
+    Read from the fingerprint's row count (``d<n>_...``)."""
+    n_docs = int(fingerprint(spark, sf_dir).split("_")[0][1:])
     return max(8, n_docs // 50_000)
 
 
@@ -194,74 +96,45 @@ def _fresh_media(spark: SparkSession, sf_dir: str) -> DataFrame:
                         multimodal.synth_warc_media_payload(
                             F.col("doc_id")))
             .withColumn("s", multimodal.warc_media_extract("payload"))
-            .select("doc_id", "source",
-                    F.col("s.media_type").alias("media_type"),
-                    F.col("s.n_units").alias("n_units"),
-                    F.col("s.sum_val").alias("sum_val"),
-                    F.col("s.n_records").alias("n_records"),
-                    F.col("s.n_responses").alias("n_responses")))
+            .select("doc_id", "source", "s.media_type", "s.n_units",
+                    "s.sum_val", "s.n_records", "s.n_responses"))
 
 
-def _served(spark: SparkSession, sf_dir: str, kind: str,
-            fresh: Callable[[SparkSession, str], DataFrame]) -> DataFrame:
-    final = os.path.join(
-        _store_root(),
-        f"{_LAYOUT_VERSION}_{_algo_version()}"
-        f"_{_fingerprint(spark, sf_dir)}_{kind}")
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            (fresh(spark, sf_dir)
-             # doc_id-clustered layout, file count scaled with corpus
-             # size: the local stand-in for bucketBy(doc_id) into a
-             # catalog table at cluster scale
-             .repartition(_layout_files(spark, sf_dir), "doc_id")
-             .sortWithinPartitions("doc_id")
-             .write.mode("overwrite").parquet(tmp))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's table; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (ADVICE r11)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    return spark.read.parquet(final)
+def _sources() -> list[str]:
+    from ecmm428_pycart_spark.datapipe import multimodal
+    from ecmm428_pycart_spark.datapipe import text as text_mod
+
+    return [inspect.getsource(m) for m in (
+        multimodal, text_mod, _fresh_html, _fresh_links, _fresh_media)]
 
 
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_CRAWL_STORE_OFF") == "1"
+_FRESH = {"html": _fresh_html, "links": _fresh_links, "media": _fresh_media}
+TABLES = {kind: store.Table("crawl", _sources, kind) for kind in _FRESH}
 
 
-def crawl_html(spark: SparkSession, sf_dir: str,
-               checkpoint_if_fresh: bool = False) -> DataFrame:
+def _served(spark: SparkSession, sf_dir: str, kind: str) -> DataFrame:
+    path = store.materialize(
+        TABLES[kind], fingerprint(spark, sf_dir),
+        lambda tmp: store.write_clustered(
+            _FRESH[kind](spark, sf_dir), tmp,
+            _layout_files(spark, sf_dir), "doc_id"))
+    return spark.read.parquet(path)
+
+
+def crawl_html(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extracted-HTML corpus (doc_id, source, text, n_links,
-    n_records), from the write-once store; values identical to the
-    fresh extraction. ``checkpoint_if_fresh`` preserves the pre-store
-    multi-branch shape when the store is bypassed (q133 fans the
-    corpus into audit + filter branches — without the store that pass
-    must still run only once)."""
-    if _off():
-        df = _fresh_html(spark, sf_dir)
-        return df.localCheckpoint(eager=True) if checkpoint_if_fresh else df
-    return _served(spark, sf_dir, "html", _fresh_html)
+    n_records); values identical to ``_fresh_html``."""
+    return _served(spark, sf_dir, "html")
 
 
 def crawl_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The extracted outlink edges (doc_id, src_host, dst_host), one
-    row per href, from the write-once store."""
-    if _off():
-        return _fresh_links(spark, sf_dir)
-    return _served(spark, sf_dir, "links", _fresh_links)
+    row per href; values identical to ``_fresh_links``."""
+    return _served(spark, sf_dir, "links")
 
 
 def crawl_media(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The decoded media roll-up feed (doc_id, source, media_type,
-    n_units, sum_val, n_records, n_responses), from the store."""
-    if _off():
-        return _fresh_media(spark, sf_dir)
-    return _served(spark, sf_dir, "media", _fresh_media)
+    n_units, sum_val, n_records, n_responses); values identical to
+    ``_fresh_media``."""
+    return _served(spark, sf_dir, "media")

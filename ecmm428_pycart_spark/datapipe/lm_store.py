@@ -1,102 +1,46 @@
-"""Write-once materialized store for the Stupid-Backoff LM count
-tables — the FOURTH derived-dataset store (after ``borders_store``,
-``crawl_store`` and ``band_store``), landing VERDICT r12 next-1.
+"""The Stupid-Backoff LM count tables, served from the write-once
+store (``datapipe/store.py``) to d37/d43 (full corpus, self-scored)
+and q95 (exact-dedup survivors, self-scored).
 
-The two slowest non-geo registry queries re-run the SAME corpus-linear
-counting pass before doing any of their own work: explode every
-document into tokens and adjacent bigrams and aggregate the unigram /
-bigram / context count tables (``text.lm_count_tables``, the heart of
-``text.bigram_lm_score``). The measured wall
-(docs/PROFILE_q95_d19_r12.json): q95's perplexity_buckets stage is
-6.1–6.4s of its 8.1s end-to-end, and d43 is the same kernel on the
-full corpus. The consumers are d43/d37 (full ``documents``,
-self-scored) and q95 (the exact-dedup canonical survivors,
-self-scored).
-
-At 100 TB you count the reference corpus ONCE and land the tables as
-columnar data — the count tables are what Brants et al. 2007 actually
-ship between their MapReduce stages — so every scoring run starts from
-a vocabulary-sized scan instead of a corpus-sized explode+shuffle.
-The reference's analogue is ``pycart/border_util.py:51,77``
-(derive-per-call — right for an 852-line single-node library, wrong at
-cluster scale).
-
-Key design points:
-
-- The stored tables are a PURE function of the variant's reference
-  corpus text: (w, cu), (w1, w2, cb, cc) with the context denominator
-  pre-folded, and the 1-row (total,) re-derived from the stored
-  unigram table. All values are exact longs, so
-  the parquet round-trip reproduces downstream scores bit-for-bit
-  (pinned by tests/test_lm_store.py).
-- The SCORED corpus never touches the store — consumers still explode
-  their own (possibly filtered) documents; only the reference-side
-  count build is served. A consumer whose ``ref`` is not byte-equal to
-  a variant's base corpus must keep calling ``text.bigram_lm_score``
-  fresh (d48's even-id reference half stays fresh for this reason —
-  its ref is a subset with its own counts).
-
-Store contract (same protocol as ``band_store``/``crawl_store``):
-
-- one entry per (layout version, producing-code hash, corpus
-  fingerprint, variant), variant in {``documents``,
-  ``documents_dedup``}; the producing-code hash folds ``text.tokens``,
-  ``text.adjacent_pairs``, ``text.lm_count_tables`` and this module's
-  builders, and the dedup variant additionally folds
-  ``dedup.exact_dup_groups`` (the ADVICE r11 staleness lesson — every
-  upstream kernel participates in the key, test-pinned).
-- an entry is a directory with two parquet subtables (``uni``/``bg``);
-  the 1-row ``total`` is NOT stored — it is re-derived at read as an
-  ungrouped aggregate over the stored unigram table (a vocabulary-sized
-  scan), because the registry-wide plan-shape invariant requires every
-  broadcast-nested-loop build side to be PROVABLY tiny from the plan
-  itself, and a global Aggregate is provably 1 row where a bare 1-row
-  FileScan is not (test_plan_shapes.py's BNLJ allowlist).
-- builds are ATOMIC and race-safe (uuid tmp dir + ``os.rename``; a
-  lost race cleans up and reads the winner; non-OSError build failures
-  also clean the tmp dir).
-
-Set ``SPARK_GRAFT_LM_STORE_OFF=1`` to bypass the store (fresh
-per-query counting — the A side of tools/ab_lm_store.py);
-``SPARK_GRAFT_LM_STORE`` overrides the store root (default
-``<repo>/out/lm_store``).
+- Stored: per variant (``documents``, ``documents_dedup``) the
+  ``text.lm_count_tables`` output over that reference corpus — (w, cu)
+  in ``uni/`` and (w1, w2, cb, cc) with the context denominator
+  folded in ``bg/``, each sub-table with its own ``_SUCCESS``. All
+  values are exact longs, so scores downstream are bit-identical to
+  counting fresh. The 1-row total is NOT stored: it is re-derived at
+  read as a global aggregate over ``uni``, because the plan-shape
+  invariant (test_plan_shapes.py's BNLJ allowlist) needs every
+  broadcast-nested-loop build side provably tiny from the plan, and a
+  global Aggregate is provably 1 row where a 1-row FileScan is not.
+  Only the reference side is served; consumers still explode the
+  corpus they score, and a consumer whose reference is not a variant's
+  base corpus keeps calling ``text.bigram_lm_score`` fresh.
+- Fingerprint: the crawl store's ``documents`` fingerprint. The
+  producing-code hash covers the tokenizer, pairing and counting
+  kernels and the builders here; ``documents_dedup`` also folds
+  ``dedup.exact_dup_groups``.
+- Layout: ``uni`` w-hashed in a quarter of the crawl store's file
+  count (at least 2), ``bg`` w1-hashed and (w1, w2)-sorted, so each
+  scan partition stays join-local on the score join's key prefix.
 """
 
 from __future__ import annotations
 
-import hashlib
 import inspect
 import os
-import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ecmm428_pycart_spark.datapipe import crawl_store, dedup, text
+from ecmm428_pycart_spark.datapipe import crawl_store, dedup, store, text
 from ecmm428_pycart_spark.session import load_table
 
-_LAYOUT_VERSION = "v1"
-_ALGO_MEMO: dict = {}
-
 _VARIANTS = ("documents", "documents_dedup")
-_SUBTABLES = ("uni", "bg")
-
-
-def _store_root() -> str:
-    env = os.environ.get("SPARK_GRAFT_LM_STORE")
-    if env:
-        return env
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(
-        os.path.abspath(__file__))))
-    return os.path.join(repo, "out", "lm_store")
 
 
 def _algo_sources(variant: str) -> list[str]:
-    """The source list ``_algo_version`` hashes — everything that
-    determines the stored rows, so any kernel edit changes the key and
-    stale entries can never serve silently (split out so tests can pin
-    that every upstream dependency participates)."""
+    """The producing code the entry key hashes: everything that
+    determines the stored rows, so any kernel edit changes the key."""
     srcs = [
         inspect.getsource(text.tokens),
         inspect.getsource(text.adjacent_pairs),
@@ -111,26 +55,15 @@ def _algo_sources(variant: str) -> list[str]:
     return srcs
 
 
-def _algo_version(variant: str) -> str:
-    if variant not in _ALGO_MEMO:
-        src = "\n".join(_algo_sources(variant))
-        _ALGO_MEMO[variant] = hashlib.sha256(
-            src.encode()).hexdigest()[:12]
-    return _ALGO_MEMO[variant]
-
-
 def _base_corpus(spark: SparkSession, sf_dir: str,
                  variant: str) -> DataFrame:
     """The (doc_id, text) reference corpus a variant counts over."""
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     if variant == "documents":
         return docs
-    if variant == "documents_dedup":
-        canon = (dedup.exact_dup_groups(docs)
-                 .select(F.col("canonical_id").alias("doc_id")))
-        return docs.join(canon, "doc_id", "left_semi")
-    raise ValueError(f"unknown lm-store variant {variant!r}; "
-                     f"expected one of {_VARIANTS}")
+    canon = (dedup.exact_dup_groups(docs)
+             .select(F.col("canonical_id").alias("doc_id")))
+    return docs.join(canon, "doc_id", "left_semi")
 
 
 def _fresh_counts(spark: SparkSession, sf_dir: str, variant: str
@@ -138,73 +71,30 @@ def _fresh_counts(spark: SparkSession, sf_dir: str, variant: str
     return text.lm_count_tables(_base_corpus(spark, sf_dir, variant))
 
 
-def _entry_key(spark: SparkSession, sf_dir: str, variant: str) -> str:
-    return (f"{_LAYOUT_VERSION}_{_algo_version(variant)}"
-            f"_{crawl_store._fingerprint(spark, sf_dir)}_lm_{variant}")
+TABLES = {v: store.Table("lm", lambda v=v: _algo_sources(v), f"lm_{v}",
+                         parts=("uni", "bg")) for v in _VARIANTS}
 
 
-def _off() -> bool:
-    return os.environ.get("SPARK_GRAFT_LM_STORE_OFF") == "1"
+def _write(spark: SparkSession, sf_dir: str, variant: str, tmp: str) -> None:
+    uni, bg, _ = _fresh_counts(spark, sf_dir, variant)
+    n_files = crawl_store._layout_files(spark, sf_dir)
+    store.write_clustered(uni, os.path.join(tmp, "uni"),
+                          max(2, n_files // 4), "w")
+    store.write_clustered(bg, os.path.join(tmp, "bg"), n_files, "w1", "w2")
 
 
 def count_tables(spark: SparkSession, sf_dir: str,
-                 variant: str = "documents",
-                 fresh_ref: DataFrame | None = None
+                 variant: str = "documents"
                  ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """The variant's (uni, bg_enriched, total) Stupid-Backoff count
-    tables, from the write-once store; values identical to counting
-    fresh (exact-long counts, bit-for-bit scores downstream).
-
-    ``fresh_ref`` is only consulted on the bypass path
-    (``SPARK_GRAFT_LM_STORE_OFF=1``): a consumer that already holds a
-    materialized copy of the variant's corpus (q95's checkpointed
-    deduped corpus) passes it so the A/B's fresh arm reproduces
-    EXACTLY the pre-store plan instead of re-deriving the corpus.
-    PRECONDITION: ``fresh_ref``'s (doc_id, text) rows must equal the
-    variant's base corpus — the store path never reads it, so a
-    mismatch would make the two paths diverge silently.
-    """
-    if variant not in _VARIANTS:
+    tables; values identical to ``_fresh_counts``."""
+    if variant not in TABLES:
         raise ValueError(f"unknown lm-store variant {variant!r}; "
                          f"expected one of {_VARIANTS}")
-    if _off():
-        if fresh_ref is not None:
-            return text.lm_count_tables(fresh_ref)
-        return _fresh_counts(spark, sf_dir, variant)
-    final = os.path.join(_store_root(), _entry_key(spark, sf_dir, variant))
-    if not os.path.isdir(final):
-        tmp = f"{final}.tmp.{uuid.uuid4().hex[:12]}"
-        try:
-            uni, bg, _ = _fresh_counts(spark, sf_dir, variant)
-            # vocabulary-sized tables: the unigram table in a handful
-            # of files, the vocab²-bounded bigram table w1-clustered
-            # with corpus-scaled file count (the local stand-in for
-            # bucketBy(w1) into a catalog table at cluster scale — the
-            # score join shuffles on (w1, w2), so w1-clustering keeps
-            # each scan partition join-local on the hot key prefix)
-            n_files = crawl_store._layout_files(spark, sf_dir)
-            (uni.repartition(max(2, n_files // 4), "w")
-             .sortWithinPartitions("w")
-             .write.mode("overwrite").parquet(os.path.join(tmp, "uni")))
-            (bg.repartition(n_files, "w1")
-             .sortWithinPartitions("w1", "w2")
-             .write.mode("overwrite").parquet(os.path.join(tmp, "bg")))
-            os.rename(tmp, final)
-        except OSError:
-            # lost a concurrent build race (final now exists) — read
-            # the winner's tables; anything else re-raises below
-            shutil.rmtree(tmp, ignore_errors=True)
-            if not os.path.isdir(final):
-                raise
-        except Exception:
-            # a failed Spark write raises Py4JJavaError, not OSError —
-            # don't leak the uuid tmp dir (the ADVICE r11 class)
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-    uni = spark.read.parquet(os.path.join(final, "uni"))
-    bg = spark.read.parquet(os.path.join(final, "bg"))
-    # total re-derived, not read: a global Aggregate is provably 1 row
-    # to the plan-shape invariant, a 1-row FileScan is not (see module
-    # docstring); the scan it aggregates is vocabulary-sized
-    total = uni.agg(F.sum("cu").alias("total"))
-    return uni, bg, total
+    path = store.materialize(
+        TABLES[variant], crawl_store.fingerprint(spark, sf_dir),
+        lambda tmp: _write(spark, sf_dir, variant, tmp))
+    uni = spark.read.parquet(os.path.join(path, "uni"))
+    bg = spark.read.parquet(os.path.join(path, "bg"))
+    # total re-derived, not read (see module docstring)
+    return uni, bg, uni.agg(F.sum("cu").alias("total"))

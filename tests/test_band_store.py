@@ -13,13 +13,14 @@ stale index would silently poison every LSH-dedup consumer
   constructed case where the degenerate-bucket cap DIFFERS between
   the full corpus and the subset, proving the cap is re-applied to
   the subset population rather than baked into the stored rows;
-- the bypass env and atomic build are exercised and the lost-race
-  branch is forced deterministically;
+- the lost-race branch is forced deterministically (the protocol
+  itself is pinned in tests/test_store.py);
 - two consumers (one documents-variant, one crawl_html-variant) are
   pinned store == fresh end-to-end.
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -32,10 +33,8 @@ def _rows(df):
 
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
-    root = str(tmp_path / "band_store")
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_BAND_STORE_OFF", raising=False)
-    return root
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    return str(tmp_path / "band_store")
 
 
 @pytest.mark.slow
@@ -107,31 +106,17 @@ def test_subset_cap_is_reapplied_not_baked_in(spark, store_root):
     assert (min(ids), max(ids)) in served  # the cap-sensitive pair
 
 
-def test_crawl_html_variant_equals_fresh_subset(spark, store_root,
-                                                tmp_path, monkeypatch):
+def test_crawl_html_variant_equals_fresh_subset(spark, store_root):
     from pyspark.sql import functions as F
 
     from ecmm428_pycart_spark.datapipe import band_store as bs
     from ecmm428_pycart_spark.datapipe import crawl_store, dedup
 
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE",
-                       str(tmp_path / "crawl_store"))
     corpus = crawl_store.crawl_html(spark, TESTDATA)
     subset = corpus.filter((F.col("doc_id") % 2) == 0)
     served = _rows(bs.candidate_pairs(spark, TESTDATA, docs=subset,
                                       variant="crawl_html"))
     assert served == _rows(dedup.lsh_candidate_pairs(subset))
-
-
-def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
-    from ecmm428_pycart_spark.datapipe import band_store as bs
-
-    root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BAND_STORE_OFF", "1")
-    assert bs.band_index(spark, TESTDATA).count() > 0
-    assert bs.candidate_pairs(spark, TESTDATA).count() >= 0
-    assert not os.path.exists(root)
 
 
 def test_unknown_variant_rejected(spark, store_root):
@@ -142,64 +127,55 @@ def test_unknown_variant_rejected(spark, store_root):
 
 
 def test_lost_race_reads_winner(spark, store_root, monkeypatch):
-    """Force the rename-collision branch deterministically (the
-    borders/crawl-store protocol): the winner's table exists, but
-    os.path.isdir lies once, so the loser really builds, really
-    collides on os.rename, cleans its tmp dir, and serves the
-    winner's rows."""
+    """Force the rename collision deterministically: a concurrent
+    builder lands the entry between the existence check and the
+    rename, so the loser cleans its tmp dir and serves the winner's
+    rows."""
     from ecmm428_pycart_spark.datapipe import band_store as bs
+    from ecmm428_pycart_spark.datapipe import store
 
-    winner = _rows(bs.band_index(spark, TESTDATA))
-    final = [d for d in os.listdir(store_root)
-             if d.endswith("_bands_documents")][0]
+    real_rename = os.rename
 
-    real_isdir = os.path.isdir
-    lied = []
+    def racing_rename(src, dst):
+        shutil.copytree(src, dst)  # the winner's complete entry
+        real_rename(src, dst)      # raises: dst is a non-empty dir
 
-    def lying_isdir(path):
-        if not lied and os.path.basename(path) == final:
-            lied.append(path)
-            return False
-        return real_isdir(path)
-
-    monkeypatch.setattr(os.path, "isdir", lying_isdir)
+    monkeypatch.setattr(store.os, "rename", racing_rename)
     loser = _rows(bs.band_index(spark, TESTDATA))
-    assert lied, "the existence check was never exercised"
-    leftovers = [d for d in os.listdir(store_root) if ".tmp." in d]
-    assert leftovers == [] and final in os.listdir(store_root)
-    assert loser == winner
+    monkeypatch.setattr(store.os, "rename", real_rename)
+    assert [d for d in os.listdir(store_root) if ".tmp." in d] == []
+    assert [d for d in os.listdir(store_root)
+            if d.endswith("_bands_documents")]
+    assert loser == _rows(bs._fresh_bands(spark, TESTDATA, "documents"))
 
 
-def test_crawl_variant_key_folds_crawl_algo(spark, store_root,
-                                            monkeypatch):
+def test_crawl_variant_key_folds_crawl_algo(spark, store_root):
     """An extractor edit must invalidate the crawl_html band index
     even when the banding code itself is untouched: the entry key
     folds in crawl_store's producing-code hash."""
     from ecmm428_pycart_spark.datapipe import band_store as bs
     from ecmm428_pycart_spark.datapipe import crawl_store
 
-    k_doc = bs._entry_key(spark, TESTDATA, "documents")
-    k_html = bs._entry_key(spark, TESTDATA, "crawl_html")
-    assert crawl_store._algo_version() in k_html
-    assert crawl_store._algo_version() not in k_doc
+    fp = crawl_store.fingerprint(spark, TESTDATA)
+    crawl_algo = crawl_store.TABLES["html"].algo
+    assert crawl_algo in bs.TABLES["crawl_html"].entry(fp)
+    assert crawl_algo not in bs.TABLES["documents"].entry(fp)
 
 
 @pytest.mark.slow
-def test_consumers_store_equals_fresh(spark, store_root, tmp_path,
-                                      monkeypatch):
+def test_consumers_store_equals_fresh(spark, store_root, monkeypatch):
     """End-to-end pin on two consumers spanning both variants: d15
     (documents) and q133 (crawl_html subset) must return identical
-    rows with the store serving and with it bypassed."""
+    rows with the store serving and with fresh hashing in its place."""
     from ecmm428_pycart_spark.benchmarks import get_queries
+    from ecmm428_pycart_spark.datapipe import band_store as bs
 
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE",
-                       str(tmp_path / "crawl_store"))
     qs = get_queries()
     for name in ("d15_dup_clusters", "q133_crawl_pipeline"):
-        monkeypatch.delenv("SPARK_GRAFT_BAND_STORE_OFF", raising=False)
-        with_store = _rows(qs[name](spark, TESTDATA))
-        monkeypatch.setenv("SPARK_GRAFT_BAND_STORE_OFF", "1")
-        fresh = _rows(qs[name](spark, TESTDATA))
+        with monkeypatch.context() as m:
+            with_store = _rows(qs[name](spark, TESTDATA))
+            m.setattr(bs, "band_index", bs._fresh_bands)
+            fresh = _rows(qs[name](spark, TESTDATA))
         assert with_store == fresh, name
 
 
@@ -209,20 +185,21 @@ def test_crawl_layout_files_scale_with_corpus(spark, monkeypatch):
     parallelism. Unit-level: inject fingerprint memo entries and read
     the derived count."""
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
+    from ecmm428_pycart_spark.datapipe import store
 
-    key = os.path.abspath(TESTDATA)
-    real = cs._FP_MEMO.get(key)
+    key = ("d", os.path.abspath(TESTDATA))
+    real = store._FP_MEMO.get(key)
     try:
         for n, want in [(500, 8), (399_999, 8), (400_000, 8),
                         (500_000, 10), (5_000_000, 100)]:
-            cs._FP_MEMO[key] = f"d{n}_0_{n - 1}_deadbeef00"
+            store._FP_MEMO[key] = f"d{n}_0_{n - 1}_deadbeef00"
             assert cs._layout_files(spark, TESTDATA) == max(8, n // 50_000)
             assert cs._layout_files(spark, TESTDATA) == want
     finally:
         if real is None:
-            cs._FP_MEMO.pop(key, None)
+            store._FP_MEMO.pop(key, None)
         else:
-            cs._FP_MEMO[key] = real
+            store._FP_MEMO[key] = real
 
 
 def test_algo_key_includes_tokenizer_source(spark):
@@ -251,17 +228,15 @@ def test_failed_build_cleans_tmp_dir(spark, store_root, monkeypatch):
     os.rename instead, so the write completes (tmp dir exists on disk)
     and the failure is a RuntimeError (non-OSError, the clause under
     test) raised after it."""
-    import os as os_mod
-
-    from ecmm428_pycart_spark.datapipe import band_store
+    from ecmm428_pycart_spark.datapipe import band_store, store
 
     seen = {}
 
     def boom(src, dst):
-        seen["tmp_existed"] = os_mod.path.isdir(src)
+        seen["tmp_existed"] = os.path.isdir(src)
         raise RuntimeError("injected post-write failure")
 
-    monkeypatch.setattr(band_store.os, "rename", boom)
+    monkeypatch.setattr(store.os, "rename", boom)
     with pytest.raises(RuntimeError, match="injected"):
         band_store.band_index(spark, TESTDATA)
     assert seen.get("tmp_existed"), "injection fired before the write"

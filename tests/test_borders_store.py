@@ -4,11 +4,12 @@ The store's whole contract is "exactly the fresh build's rows, built at
 most once, atomically": a wrong or stale store would silently poison
 every g-family consumer's oracle, so these tests compare the store
 against a same-session fresh `get_borders` build row-for-row and
-exercise the bypass env, the memoized fingerprint keying, and the
-lost-race read path.
+exercise the memoized fingerprint keying and the lost-race read path
+(the protocol itself is pinned in tests/test_store.py).
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -24,10 +25,8 @@ def _rowset(df):
 
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
-    root = str(tmp_path / "borders_store")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_BORDERS_STORE_OFF", raising=False)
-    return root
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    return str(tmp_path / "borders_store")
 
 
 @pytest.mark.slow
@@ -43,50 +42,25 @@ def test_store_equals_fresh_build(spark, store_root):
     assert len(dirs) == 1 and ".tmp." not in dirs[0]
 
 
-def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
-    from ecmm428_pycart_spark.datapipe import borders_store as bs
-
-    root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE_OFF", "1")
-    df = bs.customer_borders(spark, TESTDATA)
-    assert df.count() > 0
-    assert not os.path.exists(root)
-
-
 def test_lost_race_reads_winner(spark, store_root, monkeypatch):
-    """If the final dir appears between the existence check and the
-    rename (a concurrent gate JVM won the build race), the loser must
-    clean its tmp dir and serve the winner's table.
-
-    ADVICE r9 (low): the branch is forced DETERMINISTICALLY — the
-    winner's table exists, but os.path.isdir is patched to report it
-    missing once, so the loser really builds, really collides on
-    os.rename (rename-onto-nonempty-dir raises), and must recover."""
+    """A concurrent gate JVM lands the entry between this process's
+    existence check and its rename: the rename collides, the loser
+    cleans its tmp dir and serves the winner's table."""
     from ecmm428_pycart_spark.datapipe import borders_store as bs
+    from ecmm428_pycart_spark.datapipe import store
 
-    # winner's table, materialized up front
-    winner = _rowset(bs.customer_borders(spark, TESTDATA))
-    final = [d for d in os.listdir(store_root)][0]
+    real_rename = os.rename
 
-    real_isdir = os.path.isdir
-    lied = []
+    def racing_rename(src, dst):
+        shutil.copytree(src, dst)  # the winner's complete entry
+        real_rename(src, dst)      # raises: dst is a non-empty dir
 
-    def lying_isdir(path):
-        # lie exactly once, for the final store dir's existence check
-        if not lied and os.path.basename(path) == final:
-            lied.append(path)
-            return False
-        return real_isdir(path)
-
-    monkeypatch.setattr(os.path, "isdir", lying_isdir)
+    monkeypatch.setattr(store.os, "rename", racing_rename)
     loser = _rowset(bs.customer_borders(spark, TESTDATA))
-    assert lied, "the existence check was never exercised"
-    # the loser's rename collided, its tmp dir was cleaned, and it
-    # served the winner's rows
-    leftovers = [d for d in os.listdir(store_root) if ".tmp." in d]
-    assert leftovers == [] and final in os.listdir(store_root)
-    assert loser == winner
+    monkeypatch.setattr(store.os, "rename", real_rename)
+    assert [d for d in os.listdir(store_root) if ".tmp." in d] == []
+    assert len(os.listdir(store_root)) == 1
+    assert loser == _rowset(bs._fresh_borders(spark, TESTDATA))
 
 
 def test_nodes_match_grid_region_idx(spark):
@@ -112,8 +86,7 @@ def test_two_process_build_race(tmp_path):
     root = str(tmp_path / "race_store")
     prog = f"""
 import os
-os.environ["SPARK_GRAFT_BORDERS_STORE"] = {root!r}
-os.environ.pop("SPARK_GRAFT_BORDERS_STORE_OFF", None)
+os.environ["SPARK_GRAFT_STORE_ROOT"] = {root!r}
 import sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
@@ -130,7 +103,7 @@ print("ROWS", customer_borders(spark, {TESTDATA!r}).count())
     assert all(p.returncode == 0 for p in procs), outs
     counts = [int(o.split("ROWS")[1].split()[0]) for o in outs]
     assert counts[0] == counts[1] > 0
-    entries = os.listdir(root)
+    entries = os.listdir(os.path.join(root, "borders_store"))
     assert len(entries) == 1 and ".tmp." not in entries[0], entries
 
 
@@ -140,20 +113,9 @@ def test_orders_store_equals_fresh_build(spark, store_root):
     contract as the customer table."""
     from ecmm428_pycart_spark.datapipe import borders_store as bs
 
-    fresh = _rowset(bs._fresh_orders2500_borders(spark, TESTDATA))
+    fresh = _rowset(bs._fresh_borders(spark, TESTDATA, "_orders_grid"))
     built = _rowset(bs.orders2500_borders(spark, TESTDATA))   # build+write
     reread = _rowset(bs.orders2500_borders(spark, TESTDATA))  # pure read
     assert built == fresh and reread == fresh
     dirs = [d for d in os.listdir(store_root) if not d.startswith(".")]
     assert len(dirs) == 1 and dirs[0].split("_")[2].startswith("o")
-
-
-def test_orders_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
-    from ecmm428_pycart_spark.datapipe import borders_store as bs
-
-    root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_BORDERS_STORE_OFF", "1")
-    df = bs.orders2500_borders(spark, TESTDATA)
-    assert df.count() > 0
-    assert not os.path.exists(root)

@@ -4,12 +4,13 @@ Same contract as test_borders_store: "exactly the fresh extraction's
 rows, built at most once, atomically". A wrong or stale store would
 silently poison every crawl-family consumer (q133/q137/d93/d94/g41/
 m52), so each derived table is compared row-for-row against a
-same-session fresh extraction, the bypass env and atomic build are
-exercised, the lost-race branch is forced deterministically, and two
-consumers are pinned store == fresh end-to-end.
+same-session fresh extraction, the lost-race branch is forced
+deterministically, and two consumers are pinned store == fresh
+end-to-end (the protocol itself is pinned in tests/test_store.py).
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -22,10 +23,8 @@ def _rows(df):
 
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
-    root = str(tmp_path / "crawl_store")
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_CRAWL_STORE_OFF", raising=False)
-    return root
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    return str(tmp_path / "crawl_store")
 
 
 def test_store_equals_fresh_all_tables(spark, store_root):
@@ -44,58 +43,42 @@ def test_store_equals_fresh_all_tables(spark, store_root):
     assert len(dirs) == 3 and not any(".tmp." in d for d in dirs)
 
 
-def test_store_off_env_bypasses_disk(spark, tmp_path, monkeypatch):
-    from ecmm428_pycart_spark.datapipe import crawl_store as cs
-
-    root = str(tmp_path / "never_created")
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE", root)
-    monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE_OFF", "1")
-    assert cs.crawl_html(spark, TESTDATA).count() > 0
-    assert cs.crawl_links(spark, TESTDATA).count() > 0
-    assert cs.crawl_media(spark, TESTDATA).count() > 0
-    assert not os.path.exists(root)
-
-
 def test_lost_race_reads_winner(spark, store_root, monkeypatch):
-    """Force the rename-collision branch deterministically (same
-    protocol as test_borders_store): the winner's table exists, but
-    os.path.isdir lies once, so the loser really builds, really
-    collides on os.rename, cleans its tmp dir, and serves the
-    winner's rows."""
+    """Force the rename collision deterministically: a concurrent
+    builder lands the entry between the existence check and the
+    rename, so the loser cleans its tmp dir and serves the winner's
+    rows."""
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
+    from ecmm428_pycart_spark.datapipe import store
 
-    winner = _rows(cs.crawl_links(spark, TESTDATA))
-    final = [d for d in os.listdir(store_root) if d.endswith("_links")][0]
+    real_rename = os.rename
 
-    real_isdir = os.path.isdir
-    lied = []
+    def racing_rename(src, dst):
+        shutil.copytree(src, dst)  # the winner's complete entry
+        real_rename(src, dst)      # raises: dst is a non-empty dir
 
-    def lying_isdir(path):
-        if not lied and os.path.basename(path) == final:
-            lied.append(path)
-            return False
-        return real_isdir(path)
-
-    monkeypatch.setattr(os.path, "isdir", lying_isdir)
+    monkeypatch.setattr(store.os, "rename", racing_rename)
     loser = _rows(cs.crawl_links(spark, TESTDATA))
-    assert lied, "the existence check was never exercised"
-    leftovers = [d for d in os.listdir(store_root) if ".tmp." in d]
-    assert leftovers == [] and final in os.listdir(store_root)
-    assert loser == winner
+    monkeypatch.setattr(store.os, "rename", real_rename)
+    assert [d for d in os.listdir(store_root) if ".tmp." in d] == []
+    assert [d for d in os.listdir(store_root) if d.endswith("_links")]
+    assert loser == _rows(cs._fresh_links(spark, TESTDATA))
 
 
 def test_consumers_store_equals_fresh(spark, store_root, monkeypatch):
     """End-to-end pin on two consumers spanning both heavy tables:
     q133 (html) and g41 (links) must return identical rows with the
-    store serving and with it bypassed."""
+    store serving and with the fresh extraction in its place."""
     from ecmm428_pycart_spark.benchmarks import get_queries
+    from ecmm428_pycart_spark.datapipe import crawl_store as cs
 
     qs = get_queries()
     for name in ("q133_crawl_pipeline", "g41_host_pagerank"):
-        monkeypatch.delenv("SPARK_GRAFT_CRAWL_STORE_OFF", raising=False)
-        with_store = _rows(qs[name](spark, TESTDATA))
-        monkeypatch.setenv("SPARK_GRAFT_CRAWL_STORE_OFF", "1")
-        fresh = _rows(qs[name](spark, TESTDATA))
+        with monkeypatch.context() as m:
+            with_store = _rows(qs[name](spark, TESTDATA))
+            m.setattr(cs, "crawl_html", cs._fresh_html)
+            m.setattr(cs, "crawl_links", cs._fresh_links)
+            fresh = _rows(qs[name](spark, TESTDATA))
         assert with_store == fresh, name
 
 
@@ -120,8 +103,7 @@ def test_two_process_build_race(tmp_path):
     root = str(tmp_path / "race_store")
     prog = f"""
 import os
-os.environ["SPARK_GRAFT_CRAWL_STORE"] = {root!r}
-os.environ.pop("SPARK_GRAFT_CRAWL_STORE_OFF", None)
+os.environ["SPARK_GRAFT_STORE_ROOT"] = {root!r}
 import sys; sys.path.insert(0, {os.path.dirname(os.path.dirname(os.path.abspath(__file__)))!r})
 from pyspark.sql import SparkSession
 spark = (SparkSession.builder.master("local[2]")
@@ -139,6 +121,7 @@ print("ROWS", crawl_html(spark, {TESTDATA!r}).count())
     assert all(p.returncode == 0 for p in procs), outs
     counts = [int(o.split("ROWS")[1].split()[0]) for o in outs]
     assert counts[0] == counts[1] > 0
+    root = os.path.join(root, "crawl_store")
     entries = [d for d in os.listdir(root) if d.endswith("_html")]
     assert len(entries) == 1 and ".tmp." not in entries[0], entries
     leftovers = [d for d in os.listdir(root) if ".tmp." in d]

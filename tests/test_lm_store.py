@@ -15,13 +15,14 @@ stale count tables would silently shift every LM-quality score
 - the key folds every upstream kernel source (the ADVICE r11
   staleness class, now standing protocol) and the dedup variant's key
   additionally folds ``exact_dup_groups``;
-- the bypass env (fresh path, with and without ``fresh_ref``), the
-  build-once property, the lost-race branch, and the non-OSError
-  tmp-dir cleanup (the ADVICE r12 injection-point lesson: fail AFTER
-  the write so the tmp dir exists) are exercised.
+- the build-once property, the lost-race branch, and the non-OSError
+  tmp-dir cleanup (fail AFTER the write so the tmp dir exists) are
+  exercised on the two-sub-table entry (the protocol itself is pinned
+  in tests/test_store.py).
 """
 
 import os
+import shutil
 
 import pytest
 
@@ -39,10 +40,8 @@ def _counts_rows(counts):
 
 @pytest.fixture()
 def store_root(tmp_path, monkeypatch):
-    root = str(tmp_path / "lm_store")
-    monkeypatch.setenv("SPARK_GRAFT_LM_STORE", root)
-    monkeypatch.delenv("SPARK_GRAFT_LM_STORE_OFF", raising=False)
-    return root
+    monkeypatch.setenv("SPARK_GRAFT_STORE_ROOT", str(tmp_path))
+    return str(tmp_path / "lm_store")
 
 
 def test_store_equals_fresh_both_variants(spark, store_root):
@@ -75,7 +74,7 @@ def test_scores_bit_identical_full_corpus(spark, store_root):
         "doc_id", "text")
     fresh = text.bigram_lm_score(docs)
     stored = text.bigram_lm_score(docs, counts=ls.count_tables(
-        spark, TESTDATA, "documents", fresh_ref=docs))
+        spark, TESTDATA, "documents"))
     assert _rows(stored) == _rows(fresh)
 
 
@@ -96,27 +95,9 @@ def test_scores_bit_identical_dedup_variant(spark, store_root):
     fresh = text.perplexity_buckets(corpus).select("doc_id", "bucket")
     stored = text.perplexity_buckets(
         corpus, counts=ls.count_tables(
-            spark, TESTDATA, "documents_dedup", fresh_ref=corpus)
+            spark, TESTDATA, "documents_dedup")
     ).select("doc_id", "bucket")
     assert _rows(stored) == _rows(fresh)
-
-
-def test_bypass_env_fresh_paths(spark, store_root, monkeypatch):
-    from ecmm428_pycart_spark.datapipe import lm_store as ls
-    from ecmm428_pycart_spark.session import load_table
-
-    monkeypatch.setenv("SPARK_GRAFT_LM_STORE_OFF", "1")
-    want = _counts_rows(ls._fresh_counts(spark, TESTDATA, "documents"))
-    # without fresh_ref: derives the variant corpus itself
-    assert _counts_rows(ls.count_tables(
-        spark, TESTDATA, "documents")) == want
-    # with fresh_ref: counts over the caller's frame (same content)
-    docs = load_table(spark, TESTDATA, "documents").select(
-        "doc_id", "text")
-    assert _counts_rows(ls.count_tables(
-        spark, TESTDATA, "documents", fresh_ref=docs)) == want
-    # nothing was written
-    assert not os.path.isdir(store_root) or os.listdir(store_root) == []
 
 
 def test_builds_at_most_once(spark, store_root, monkeypatch):
@@ -137,25 +118,21 @@ def test_builds_at_most_once(spark, store_root, monkeypatch):
 
 
 def test_lost_race_reads_winner(spark, store_root, monkeypatch):
-    # force the race: os.rename raises OSError AFTER a concurrent
-    # winner materialized `final` — the loser must clean its tmp dir
-    # and serve the winner's tables
-    import os as os_mod
-
+    # force the race: a concurrent winner lands its entry before this
+    # build's rename — the loser must clean its tmp dir and serve the
+    # winner's tables
     from ecmm428_pycart_spark.datapipe import lm_store as ls
+    from ecmm428_pycart_spark.datapipe import store
 
-    final = os.path.join(store_root,
-                         ls._entry_key(spark, TESTDATA, "documents"))
-    real_rename = os_mod.rename
+    real_rename = os.rename
 
     def racing_rename(src, dst):
-        if dst == final and not os_mod.path.isdir(final):
-            real_rename(src, final)  # the "winner" lands first
-            raise OSError("injected lost race")
-        return real_rename(src, dst)
+        shutil.copytree(src, dst)  # the winner's complete entry
+        real_rename(src, dst)      # raises: dst is a non-empty dir
 
-    monkeypatch.setattr(ls.os, "rename", racing_rename)
+    monkeypatch.setattr(store.os, "rename", racing_rename)
     got = ls.count_tables(spark, TESTDATA, "documents")
+    monkeypatch.setattr(store.os, "rename", real_rename)
     want = _counts_rows(ls._fresh_counts(spark, TESTDATA, "documents"))
     assert _counts_rows(got) == want
     leftovers = [d for d in os.listdir(store_root) if ".tmp." in d]
@@ -165,17 +142,16 @@ def test_lost_race_reads_winner(spark, store_root, monkeypatch):
 def test_failed_build_cleans_tmp_dir(spark, store_root, monkeypatch):
     # non-OSError failure AFTER the parquet writes completed (the
     # ADVICE r12 injection-point lesson): tmp dir exists, must be gone
-    import os as os_mod
-
     from ecmm428_pycart_spark.datapipe import lm_store as ls
+    from ecmm428_pycart_spark.datapipe import store
 
     seen = {}
 
     def boom(src, dst):
-        seen["tmp_existed"] = os_mod.path.isdir(src)
+        seen["tmp_existed"] = os.path.isdir(src)
         raise RuntimeError("injected post-write failure")
 
-    monkeypatch.setattr(ls.os, "rename", boom)
+    monkeypatch.setattr(store.os, "rename", boom)
     with pytest.raises(RuntimeError, match="injected"):
         ls.count_tables(spark, TESTDATA, "documents")
     assert seen.get("tmp_existed"), "injection fired before the write"
@@ -203,15 +179,17 @@ def test_algo_key_includes_every_upstream_kernel(spark):
     dedup_srcs = ls._algo_sources("documents_dedup")
     assert inspect.getsource(dedup.exact_dup_groups) in dedup_srcs
     assert inspect.getsource(dedup.exact_dup_groups) not in srcs
-    assert ls._algo_version("documents") != ls._algo_version(
-        "documents_dedup")
+    assert (ls.TABLES["documents"].algo
+            != ls.TABLES["documents_dedup"].algo)
 
 
 def test_variant_keys_distinct_and_validated(spark, store_root):
+    from ecmm428_pycart_spark.datapipe import crawl_store
     from ecmm428_pycart_spark.datapipe import lm_store as ls
 
-    k1 = ls._entry_key(spark, TESTDATA, "documents")
-    k2 = ls._entry_key(spark, TESTDATA, "documents_dedup")
+    fp = crawl_store.fingerprint(spark, TESTDATA)
+    k1 = ls.TABLES["documents"].entry(fp)
+    k2 = ls.TABLES["documents_dedup"].entry(fp)
     assert k1 != k2
     with pytest.raises(ValueError, match="unknown lm-store variant"):
         ls.count_tables(spark, TESTDATA, "nope")

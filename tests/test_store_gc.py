@@ -1,7 +1,7 @@
-"""Pins for tools/store_gc.py: live entries (current key prefix, ANY
-fingerprint) must survive, orphaned generations and — only with
---tmp-too — in-flight tmp dirs must go, and dry-run must delete
-nothing."""
+"""Pins for tools/store_gc.py: live entries (a declared table's current
+key prefix, ANY fingerprint, complete) must survive; orphaned
+generations, incomplete entries and — only with --tmp-too — in-flight
+tmp dirs must go; dry-run must delete nothing."""
 
 import os
 import subprocess
@@ -17,60 +17,63 @@ def _run(*flags, env):
         capture_output=True, text=True, env=env, cwd=REPO, check=True)
 
 
+def _entry(path, sealed=True):
+    path.mkdir(parents=True)
+    (path / "part-0.parquet").write_bytes(b"x")
+    if sealed:
+        (path / "_SUCCESS").write_text("part-0.parquet\t1\n")
+    return path
+
+
 def test_gc_keeps_live_prefixes_and_removes_orphans(tmp_path):
     from ecmm428_pycart_spark.datapipe import band_store as bs
     from ecmm428_pycart_spark.datapipe import borders_store as obs
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
     from ecmm428_pycart_spark.datapipe import lm_store as ls
 
-    roots = {"SPARK_GRAFT_BORDERS_STORE": tmp_path / "borders",
-             "SPARK_GRAFT_CRAWL_STORE": tmp_path / "crawl",
-             "SPARK_GRAFT_BAND_STORE": tmp_path / "band",
-             "SPARK_GRAFT_LM_STORE": tmp_path / "lm"}
-    for r in roots.values():
-        r.mkdir()
-
+    borders, crawl = tmp_path / "borders_store", tmp_path / "crawl_store"
+    band, lm = tmp_path / "band_store", tmp_path / "lm_store"
     live = [
-        roots["SPARK_GRAFT_BORDERS_STORE"]
-        / f"{obs._LAYOUT_VERSION}_{obs._algo_version()}_c9_0_8_ffff",
-        roots["SPARK_GRAFT_CRAWL_STORE"]
-        / f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_d9_0_8_eeee_html",
-        roots["SPARK_GRAFT_BAND_STORE"]
-        / f"{bs._LAYOUT_VERSION}_{bs._algo_version()}_d9_0_8_dddd"
-          f"_bands_documents",
-        roots["SPARK_GRAFT_BAND_STORE"]
-        / f"{bs._LAYOUT_VERSION}_{bs._algo_version()}"
-          f"-c{cs._algo_version()}_d9_0_8_dddd_bands_crawl_html",
-        roots["SPARK_GRAFT_LM_STORE"]
-        / f"{ls._LAYOUT_VERSION}_{ls._algo_version('documents')}"
-          f"_d9_0_8_cccc_lm_documents",
-        roots["SPARK_GRAFT_LM_STORE"]
-        / f"{ls._LAYOUT_VERSION}_{ls._algo_version('documents_dedup')}"
-          f"_d9_0_8_cccc_lm_documents_dedup",
+        _entry(borders / obs.CUSTOMER.entry("c9_0_8_ffff")),
+        # the orders grid (g14) shares the borders directory
+        _entry(borders / f"v1_{obs.ORDERS.algo}_o9_0_8_ffff"),
+        _entry(crawl / cs.TABLES["html"].entry("d9_0_8_eeee")),
+        _entry(band / bs.TABLES["documents"].entry("d9_0_8_dddd")),
+        _entry(band / f"v1_{bs.TABLES['documents'].algo}"
+                      f"-c{cs.TABLES['html'].algo}_d9_0_8_dddd"
+                      f"_bands_crawl_html"),
     ]
+    for v in ls.TABLES:  # two sub-tables, each with its own marker
+        entry = lm / ls.TABLES[v].entry("d9_0_8_cccc")
+        _entry(entry / "uni"), _entry(entry / "bg")
+        live.append(entry)
     dead = [
-        roots["SPARK_GRAFT_BORDERS_STORE"] / "v1_c9_0_8",  # pre-r10 format
-        roots["SPARK_GRAFT_CRAWL_STORE"] / "v1_000000000000_d9_0_8_x_html",
-        roots["SPARK_GRAFT_BAND_STORE"] / "v0_stale_d9_0_8_x_bands_documents",
-        roots["SPARK_GRAFT_LM_STORE"] / "v1_000000000000_d9_0_8_x_lm_documents",
+        _entry(borders / "v1_c9_0_8"),  # pre-r10 key format
+        _entry(crawl / "v1_000000000000_d9_0_8_x_html"),
+        _entry(band / "v0_stale_d9_0_8_x_bands_documents"),
+        _entry(lm / "v1_000000000000_d9_0_8_x_lm_documents"),
     ]
-    tmpd = roots["SPARK_GRAFT_CRAWL_STORE"] / (
-        f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_d9_0_8_eeee_html"
-        ".tmp.abc123")
-    for d in [*live, *dead, tmpd]:
-        d.mkdir()
-        (d / "part-0.parquet").write_bytes(b"x")
+    incomplete = [
+        _entry(crawl / cs.TABLES["links"].entry("d9_0_8_eeee"),
+               sealed=False),
+    ]
+    half_lm = lm / ls.TABLES["documents"].entry("d7_0_6_bbbb")
+    _entry(half_lm / "uni"), _entry(half_lm / "bg", sealed=False)
+    incomplete.append(half_lm)
+    tmpd = _entry(crawl / (cs.TABLES["html"].entry("d9_0_8_eeee")
+                           + ".tmp.abc123"), sealed=False)
 
-    env = {**os.environ,
-           **{k: str(v) for k, v in roots.items()}}
+    env = {**os.environ, "SPARK_GRAFT_STORE_ROOT": str(tmp_path)}
 
     out = _run(env=env).stdout              # dry-run: nothing deleted
-    assert all(d.exists() for d in [*live, *dead, tmpd])
-    assert out.count("DEAD") == len(dead) and "6 live" in out
+    assert all(d.exists() for d in [*live, *dead, *incomplete, tmpd])
+    assert out.count("DEAD") == len(dead)
+    assert out.count("INCOMPLETE") == len(incomplete)
+    assert f"{len(live)} live" in out
 
     _run("--apply", env=env)                # orphans go, tmp stays
     assert all(d.exists() for d in live) and tmpd.exists()
-    assert not any(d.exists() for d in dead)
+    assert not any(d.exists() for d in [*dead, *incomplete])
 
     _run("--apply", "--tmp-too", env=env)   # now the tmp dir goes too
     assert all(d.exists() for d in live)

@@ -58,8 +58,6 @@ def main() -> None:
 
     # both derived-dataset stores warm in BOTH arms — the diff must be
     # the CC loop alone
-    os.environ.pop("SPARK_GRAFT_CRAWL_STORE_OFF", None)
-    os.environ.pop("SPARK_GRAFT_BAND_STORE_OFF", None)
     cs.crawl_html(spark, sf_dir).count()
     for variant in bs._VARIANTS:
         bs.band_index(spark, sf_dir, variant).count()

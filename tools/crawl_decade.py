@@ -95,7 +95,7 @@ def main() -> None:
     ap.add_argument("--scratch", default="/tmp/pycart_crawl_sf1")
     args = ap.parse_args()
 
-    from ecmm428_pycart_spark.datapipe import band_store as bs
+    from ecmm428_pycart_spark.datapipe import store
     from ecmm428_pycart_spark.datapipe import crawl_store as cs
     from ecmm428_pycart_spark.session import get_spark
 
@@ -104,10 +104,8 @@ def main() -> None:
 
     # observed, not inherited: wipe the stores so both scales' builds
     # are timed in this session, then the query loop scans warm tables
-    shutil.rmtree(cs._store_root(), ignore_errors=True)
-    shutil.rmtree(bs._store_root(), ignore_errors=True)
-    os.environ.pop("SPARK_GRAFT_CRAWL_STORE_OFF", None)
-    os.environ.pop("SPARK_GRAFT_BAND_STORE_OFF", None)
+    shutil.rmtree(store.family_root("crawl"), ignore_errors=True)
+    shutil.rmtree(store.family_root("band"), ignore_errors=True)
     # warm the Arrow/python-worker path before timing any build: the
     # first pandas-UDF call in a session pays worker spawn + codegen,
     # which at toy corpus sizes dwarfs the per-byte work and inverted

@@ -1,21 +1,16 @@
-"""Garbage-collect orphaned derived-dataset store entries.
+"""Garbage-collect derived-table store entries that can never be served.
 
-The four write-once stores (borders / crawl / band / lm) key every entry
-by layout version + producing-code source hash (+ corpus content
-fingerprint), so editing a producer or hardening a fingerprint
-orphans the old entries: they can never be SERVED again (the key no
-longer matches), but they sit on disk forever — e.g. the round-10
-borders key-format change and the round-11 fingerprint hardening each
-left a generation of unreachable directories behind.
-
-An entry is LIVE iff the current module could construct its name for
-SOME corpus: it starts with the module's current
-``{layout}_{algo-hash}`` prefix (for the band store's crawl_html
-variant, ``{layout}_{algo}-c{crawl-algo}``). Entries with live
-prefixes but unfamiliar fingerprints are KEPT — other sf_dirs /
-scratch corpora are legitimately different fingerprints. ``.tmp.``
-directories are in-flight builds; they are removed only with
-``--tmp-too`` (safe on a quiescent host, not while a build races).
+Every entry name starts with ``v1_<algo>_`` (``datapipe/store.py``),
+the hash of its producing code, so editing a producer or changing a
+key orphans the old entries. An entry is LIVE iff some declared table
+(``store.tables()``, the same table ``store.materialize`` hashes) owns
+its name and the entry is complete; entries of other fingerprints are
+kept, since other inputs legitimately have other fingerprints. Entries
+with a live name but a missing ``_SUCCESS`` or a file of the wrong size
+are INCOMPLETE: ``materialize`` refuses them, and removing them lets
+the next call rebuild. ``.tmp.`` directories are in-flight builds; they
+are removed only with ``--tmp-too`` (safe on a quiescent host, not
+while a build runs).
 
 Dry-run by default; pass ``--apply`` to delete.
 
@@ -32,31 +27,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
-def live_prefixes() -> dict[str, list[str]]:
-    """Store root → the entry-name prefixes the CURRENT code serves."""
-    from ecmm428_pycart_spark.datapipe import band_store as bs
-    from ecmm428_pycart_spark.datapipe import borders_store as os_
-    from ecmm428_pycart_spark.datapipe import crawl_store as cs
-    from ecmm428_pycart_spark.datapipe import lm_store as ls
-
-    band_doc = f"{bs._LAYOUT_VERSION}_{bs._algo_version()}_"
-    band_html = (f"{bs._LAYOUT_VERSION}_{bs._algo_version()}"
-                 f"-c{cs._algo_version()}_")
-    return {
-        os_._store_root(): [
-            f"{os_._LAYOUT_VERSION}_{os_._algo_version()}_"],
-        cs._store_root(): [
-            f"{cs._LAYOUT_VERSION}_{cs._algo_version()}_"],
-        bs._store_root(): [band_doc, band_html],
-        # the lm store's algo hash is per-variant (the dedup variant
-        # folds exact_dup_groups), so each variant has its own prefix
-        ls._store_root(): [
-            f"{ls._LAYOUT_VERSION}_{ls._algo_version(v)}_"
-            for v in ls._VARIANTS],
-    }
-
-
 def main() -> None:
+    from ecmm428_pycart_spark.datapipe import store
+
     ap = argparse.ArgumentParser()
     ap.add_argument("--apply", action="store_true",
                     help="actually delete (default: dry-run report)")
@@ -65,28 +38,28 @@ def main() -> None:
                          "quiescent host)")
     args = ap.parse_args()
 
-    n_dead = n_live = 0
-    for root, prefixes in live_prefixes().items():
-        if not os.path.isdir(root):
-            continue
-        for entry in sorted(os.listdir(root)):
+    tables = store.tables()
+    n_live = n_gone = 0
+    for family in store.FAMILIES:
+        root = store.family_root(family)
+        for entry in sorted(os.listdir(root)) if os.path.isdir(root) else []:
             path = os.path.join(root, entry)
-            if not os.path.isdir(path) or entry.startswith("."):
-                continue
+            owner = next((t for t in tables
+                          if t.family == family and t.owns(entry)), None)
             if ".tmp." in entry:
-                if args.tmp_too:
-                    print(f"TMP   {path}")
-                    if args.apply:
-                        shutil.rmtree(path, ignore_errors=True)
-                continue
-            if any(entry.startswith(p) for p in prefixes):
-                n_live += 1
-                continue
-            n_dead += 1
-            print(f"DEAD  {path}")
-            if args.apply:
-                shutil.rmtree(path, ignore_errors=True)
-    print(f"# {n_live} live, {n_dead} orphaned"
+                label = "TMP" if args.tmp_too else None
+            elif owner is None:
+                label = "DEAD"
+            elif not store.complete(path, owner.parts):
+                label = "INCOMPLETE"
+            else:
+                label, n_live = None, n_live + 1
+            if label and os.path.isdir(path):
+                n_gone += label != "TMP"
+                print(f"{label:<10} {path}")
+                if args.apply:
+                    shutil.rmtree(path, ignore_errors=True)
+    print(f"# {n_live} live, {n_gone} dead or incomplete"
           + ("" if args.apply else " (dry-run; pass --apply to delete)"))
 
 
