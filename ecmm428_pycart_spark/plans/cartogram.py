@@ -17,11 +17,14 @@ constructor (pycart/cartogram.py:142-170) and exposes:
     distributed setup; two Spark jobs per call (three with ``borders``)
     and one more to read the circle polygons. Bounded by one executor
     (fine: reference workloads are ≤ ~400 regions).
-  * ``mode='scalable'`` — synchronous Jacobi iteration: grid-bucket
-    distance join + native-column force math + groupBy(focal) agg per
-    step, localCheckpoint each iteration to truncate lineage. Safe at
-    cluster scale; documented deviation from the reference's
-    order-dependent updates (converges to an equivalent layout).
+  * ``mode='scalable'`` — synchronous Jacobi iteration, one exchange
+    per step: every region goes to its grid cell (side 2·widest) and,
+    as a ghost, to the 8 cells around it; one applyInPandas per bucket
+    of cells runs the vectorised force kernel
+    (``dorling_core.halo_step``), and a lazy localCheckpoint per step
+    truncates lineage. Safe at cluster scale; documented deviation from
+    the reference's order-dependent updates (converges to an equivalent
+    layout).
 """
 
 from __future__ import annotations
@@ -29,6 +32,7 @@ from __future__ import annotations
 import math
 import os
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -42,7 +46,6 @@ from ecmm428_pycart_spark.geometry.udfs import (
 )
 from ecmm428_pycart_spark.operators.borders import (get_borders, region_index,
                                                     with_region_idx)
-from ecmm428_pycart_spark.operators.spatial_join import distance_range_self_join
 from ecmm428_pycart_spark.plans import dorling_core
 
 
@@ -67,6 +70,16 @@ def _ckpt(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
+# exact sum type for the radius calibration: 20 integer digits, 18
+# fractional ones
+_EXACT = "decimal(38,18)"
+
+
+def _unit(value_col: str):
+    """Unit radius: the radius of a circle of area ``value``."""
+    return F.sqrt(F.col(value_col) / math.pi)
+
+
 # no Queen edges at all (single region / all islands): the reference
 # divides by zero here (cartogram.py:335); we fail fast with this instead
 _NO_EDGES = ("dorling: no contiguity edges — every region is an island, "
@@ -77,14 +90,6 @@ _NO_EDGES = ("dorling: no contiguity edges — every region is an island, "
 class Cartogram:
     """Binds a dataset + column names; no computation until an algorithm
     is called (pycart/cartogram.py:142-170, A1)."""
-
-    # Below this many regions the per-iteration borders/forces joins are
-    # broadcast; above it they stay shuffle joins. The broadcast build
-    # side is the DIRECTED borders edge list, ~8 edges/region × ~40 B ≈
-    # 32 MB at 100k regions — comfortably under executor/driver limits.
-    # 1M regions would push it past 300 MB (repeated every iteration),
-    # so the ceiling sits at 100k; raise only with a measured edge count.
-    _BROADCAST_REGIONS = 100_000
 
     def __init__(self, df: DataFrame, value_field: str, id_field: str,
                  geometry_field: str = "geometry", idx_field: str | None = None,
@@ -145,7 +150,7 @@ class Cartogram:
     # ------------------------------------------------------------------
     # Dorling (A3)
     # ------------------------------------------------------------------
-    def _dorling_setup(self, materialize_borders: bool = False):
+    def _dorling_setup(self, scalable: bool = False):
         """Distributed setup of the scalable mode and ``dorling_radii``
         (pycart/cartogram.py:308-341): borders, perimeters, centroids,
         radius calibration k = ΣD/ΣR over the directed edge list
@@ -154,10 +159,12 @@ class Cartogram:
         Returns (state_df, borders_df, widest). state has columns
         region_idx, id, value, cx, cy, radius, perimeter.
 
-        ``materialize_borders`` checkpoints the borders pipeline (vertex
-        join + weight UDF) eagerly — pass True when borders will be
-        re-consumed per iteration (scalable mode); the extra action is a
-        net loss for the one-shot ``dorling_radii``.
+        ``scalable`` materialises what the scalable mode reads again
+        after the calibration: the borders pipeline (vertex join +
+        weight UDF, read again to attach the weights) and, eagerly, the
+        regions with their centroid/perimeter UDF columns. Both are a
+        net loss for the one-shot ``dorling_radii`` (measured: g03 and
+        q41 slower with the eager regions checkpoint).
         """
         v, i, g = self.value_field, self.id_field, self.geo_field
         cols = [v, i, g]
@@ -175,7 +182,7 @@ class Cartogram:
         else:
             borders, _islands = get_borders(base, i, g,
                                             idx_field="region_idx")
-        if materialize_borders and self._borders is None:
+        if scalable and self._borders is None:
             borders = _ckpt(borders)
 
         regions = centroid_cols(base, geom_col=g, prefix="c")
@@ -184,38 +191,41 @@ class Cartogram:
             "region_idx", F.col(i).alias("_id"), F.col(v).alias("_value"),
             "cx", "cy", "perimeter",
         )
+        if scalable:
+            # eager: the calibration collect below runs two concurrent
+            # map stages over regions, and state reads it again; a lazy
+            # checkpoint would still run the UDFs twice
+            regions = regions.localCheckpoint(eager=True)
 
-        pos = regions.select("region_idx", "cx", "cy", "_value")
-        f = pos.select(F.col("region_idx").alias("focal"),
-                       F.col("cx").alias("_fx"), F.col("cy").alias("_fy"),
-                       F.col("_value").alias("_fv"))
-        n = pos.select(F.col("region_idx").alias("neighbor"),
-                       F.col("cx").alias("_nx"), F.col("cy").alias("_ny"),
-                       F.col("_value").alias("_nv"))
-        edge = borders.join(f, "focal").join(n, "neighbor")
         # ONE driver round trip for all loop-control scalars: the edge
-        # calibration sums and the region stats are independent 1-row
-        # aggregates, crossJoined and collected together. widest is
-        # derived as k·max(unit radius) — bit-identical to
+        # calibration sums and the widest unit radius are one aggregate
+        # over edge rows and region rows, so the collect runs one
+        # exchange. The sums are decimal, hence exact: a double sum
+        # depends on the order partial sums arrive in, and k with it.
+        # widest is derived as k·max(unit radius) — bit-identical to
         # max(unit radius·k) because multiplying by a positive scalar is
-        # monotone under IEEE rounding.
-        sums = edge.agg(
-            F.sum(F.hypot(F.col("_nx") - F.col("_fx"),
-                          F.col("_ny") - F.col("_fy"))).alias("total_distance"),
-            F.sum(F.sqrt(F.col("_fv") / math.pi)
-                  + F.sqrt(F.col("_nv") / math.pi)).alias("total_radius"),
-        )
-        stats = regions.agg(
-            F.max(F.sqrt(F.col("_value") / math.pi)).alias("_maxur"),
-            F.count(F.lit(1)).alias("_n"))
-        row = sums.crossJoin(stats).collect()[0]
+        # monotone under IEEE rounding. Both joins read one positions
+        # frame, so they share its broadcast.
+        pos = regions.select("region_idx", "cx", "cy", "_value")
+        f, n = pos.alias("f"), pos.alias("n")
+        nothing = F.lit(None).cast("double")
+        edge = (borders.join(f, F.col("focal") == F.col("f.region_idx"))
+                .join(n, F.col("neighbor") == F.col("n.region_idx"))
+                .select(F.hypot(F.col("n.cx") - F.col("f.cx"),
+                                F.col("n.cy") - F.col("f.cy")).alias("_d"),
+                        (_unit("f._value") + _unit("n._value")).alias("_r"),
+                        nothing.alias("_u")))
+        row = edge.unionByName(regions.select(
+            nothing.alias("_d"), nothing.alias("_r"),
+            _unit("_value").alias("_u"))).agg(
+            F.sum(F.col("_d").cast(_EXACT)).alias("total_distance"),
+            F.sum(F.col("_r").cast(_EXACT)).alias("total_radius"),
+            F.max("_u").alias("_maxur")).collect()[0]
         if row["total_radius"] is None or float(row["total_radius"]) == 0.0:
             raise ValueError(_NO_EDGES)
         k = float(row["total_distance"]) / float(row["total_radius"])
 
-        state = regions.withColumn(
-            "radius", F.sqrt(F.col("_value") / math.pi) * F.lit(k))
-        self._n_regions = int(row["_n"])
+        state = regions.withColumn("radius", _unit("_value") * F.lit(k))
         return state, borders, float(row["_maxur"]) * k
 
     def dorling_radii(self) -> DataFrame:
@@ -241,7 +251,7 @@ class Cartogram:
             moved = self._dorling_fused(iterations, ratio, friction, stop)
         elif mode == "scalable":
             state, borders, widest = self._dorling_setup(
-                materialize_borders=True)
+                scalable=True)
             moved = self._dorling_scalable(state, borders, widest,
                                            iterations, ratio, friction, stop)
         else:
@@ -309,89 +319,93 @@ class Cartogram:
 
     def _dorling_scalable(self, state, borders, widest,
                           iterations, ratio, friction, stop):
-        """Synchronous Jacobi iteration, fully distributed.
+        """Synchronous Jacobi iteration, one exchange per step.
 
-        Per step: grid-bucket candidate join (cell = 2·widest, the max
-        possible interaction distance) → per-pair force components as
-        native columns (CASE WHEN, whole-stage codegen) → one shuffle on
-        groupBy(focal) → position update join. localCheckpoint truncates
-        lineage so plan size stays O(1) across iterations.
-
-        Checkpoint cadence is every iteration deliberately: measured
-        every-3rd-iteration checkpointing is ~30-50% slower here because
-        the un-truncated plan replays the grid join chain 3× deep —
-        materializing the (small) state each step is the cheaper side of
-        the trade at every scale tested (144-1600 regions). Since r14
-        the checkpoints are LAZY (see ``_ckpt``): the cadence and the
-        compiled plans are identical, but the per-iteration
-        materialization jobs collapse into the query's terminal action.
-
-        The borders join and the force→position join are per-region-sized
-        sides; below _BROADCAST_REGIONS they are broadcast (measured 4×
-        faster at 15k regions: shuffle-stage overhead dominates tiny
-        data), above it they stay shuffle hash joins on region_idx.
+        Grid cells have side 2·widest, the largest interaction distance.
+        Each step sends every region to its home cell and, as a ghost
+        carrying only its position and radius, to the 8 cells around it
+        (``_halo``), so an owned region finds every region it can touch
+        in its own cell. Cells are grouped into ``spark.sql.shuffle.
+        partitions`` buckets; one applyInPandas per bucket runs the
+        vectorised kernel ``dorling_core.halo_step`` (grouping by cell
+        instead pays pandas overhead per cell: ~3x slower measured).
+        Forces are summed in ascending neighbour region_idx, so positions
+        do not depend on partitioning or AQE. Each owned region's Queen
+        weights ride along as two array columns, attached once here
+        (measured faster than sending edge rows through each exchange);
+        the id and value are joined back after the loop. The lazy
+        localCheckpoint per step (``_ckpt``) keeps the plan O(1) deep.
         """
-        bw = borders.select(
-            F.col("focal").alias("f_region_idx"),
-            F.col("neighbor").alias("n_region_idx"),
-            "weight")
-        small = getattr(self, "_n_regions", None) is not None \
-            and self._n_regions <= self._BROADCAST_REGIONS
-        hint = F.broadcast if small else (lambda df: df)
-        cur = _ckpt(state)
+        nparts = int(state.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions"))
+        size = 2.0 * widest
+        # weights attached in one exchange: region rows and edge rows
+        # grouped by region, each column taken from the rows that carry it
+        cols = ["cx", "cy", "radius", "perimeter"]
+        rows = state.select("region_idx", *cols,
+                            F.lit(None).cast("struct<neighbor:bigint,"
+                                             "weight:double>").alias("_e"))
+        rows = rows.unionByName(borders.select(
+            F.col("focal").alias("region_idx"),
+            *[F.lit(None).cast("double").alias(c) for c in cols],
+            F.struct(F.col("neighbor").cast("long").alias("neighbor"),
+                     F.col("weight").cast("double").alias("weight"))
+            .alias("_e")))
+        cur = _ckpt(rows.groupBy("region_idx")
+                    .agg(*[F.max(c).alias(c) for c in cols],
+                         F.collect_list("_e").alias("_e"))
+                    .filter(F.col("cx").isNotNull())
+                    .select("region_idx", *cols,
+                            F.col("_e.neighbor").alias("_nb"),
+                            F.col("_e.weight").alias("_wt")))
+        schema = cur.schema
+
+        def step(pdf):
+            own = pdf["owned"].to_numpy()
+            mine = pdf[own]
+            edges = (np.repeat(mine["region_idx"].to_numpy(),
+                               mine["_nb"].map(len)),
+                     np.concatenate([*mine["_nb"], np.empty(0, "i8")]),
+                     np.concatenate([*mine["_wt"], np.empty(0)]))
+            x, y = dorling_core.halo_step(
+                pdf["gx"], pdf["gy"], own, pdf["region_idx"], pdf["cx"],
+                pdf["cy"], pdf["radius"], pdf["perimeter"], edges,
+                ratio, friction, widest)
+            return mine[schema.names].assign(cx=x, cy=y)
+
         n_iter = iterations if stop is None else min(iterations, stop)
+        halo = _halo(schema, size, nparts)
         for _ in range(n_iter):
-            cand = distance_range_self_join(
-                cur.select("region_idx", "cx", "cy", "radius", "perimeter"),
-                "cx", "cy", max_dist=2.0 * widest, key="region_idx")
-            cand = cand.filter(
-                (F.col("dist") > 0)
-                & (F.col("dist") < F.lit(widest) + F.col("f_radius")))
-            pair = cand.join(hint(bw), ["f_region_idx", "n_region_idx"], "left")
-            ov = (F.col("n_radius") + F.col("f_radius")) - F.col("dist")
-            dxu = (F.col("n_cx") - F.col("f_cx")) / F.col("dist")
-            dyu = (F.col("n_cy") - F.col("f_cy")) / F.col("dist")
-            att_ov = F.when(
-                F.col("weight").isNotNull(),
-                F.abs(ov) * F.col("weight") / F.col("f_perimeter")
-            ).otherwise(ov)
-            pair = pair.select(
-                "f_region_idx", "dist",
-                F.when(ov > 0, -ov * dxu).otherwise(0.0).alias("_xr"),
-                F.when(ov > 0, -ov * dyu).otherwise(0.0).alias("_yr"),
-                F.when(ov <= 0, att_ov * dxu).otherwise(0.0).alias("_xa"),
-                F.when(ov <= 0, att_ov * dyu).otherwise(0.0).alias("_ya"),
-            )
-            forces = pair.groupBy("f_region_idx").agg(
-                F.sum("_xr").alias("xrepel"), F.sum("_yr").alias("yrepel"),
-                F.sum("_xa").alias("xattract"), F.sum("_ya").alias("yattract"),
-                F.min("dist").alias("_mind"),
-            )
-            j = cur.join(hint(forces),
-                         cur["region_idx"] == forces["f_region_idx"], "left")
-            closest = F.when(F.col("_mind").isNull() | (F.col("_mind") > widest),
-                             F.lit(widest)).otherwise(F.col("_mind"))
-            xr = F.coalesce(F.col("xrepel"), F.lit(0.0))
-            yr = F.coalesce(F.col("yrepel"), F.lit(0.0))
-            xa = F.coalesce(F.col("xattract"), F.lit(0.0))
-            ya = F.coalesce(F.col("yattract"), F.lit(0.0))
-            rd = F.hypot(xr, yr)
-            ad = F.hypot(xa, ya)
-            clamp = rd > closest
-            xr2 = F.when(clamp, closest * xr / (rd + 1.0)).otherwise(xr)
-            yr2 = F.when(clamp, closest * yr / (rd + 1.0)).otherwise(yr)
-            rd2 = F.when(clamp, closest).otherwise(rd)
-            xa_c = F.when(ad > closest, closest * xa / (ad + 1.0)).otherwise(xa)
-            ya_c = F.when(ad > closest, closest * ya / (ad + 1.0)).otherwise(ya)
-            xtotal = F.when(rd2 > 0,
-                            (1.0 - ratio) * xr2 + ratio * (rd2 * xa / (ad + 1.0))
-                            ).otherwise(xa_c)
-            ytotal = F.when(rd2 > 0,
-                            (1.0 - ratio) * yr2 + ratio * (rd2 * ya / (ad + 1.0))
-                            ).otherwise(ya_c)
-            cur = _ckpt(j.select(
-                "region_idx", "_id", "_value", "perimeter", "radius",
-                (F.col("cx") + friction * xtotal).alias("cx"),
-                (F.col("cy") + friction * ytotal).alias("cy"),
-            ))
-        return cur
+            cur = _ckpt(cur.select(halo).groupBy("_bucket")
+                        .applyInPandas(step, schema))
+        return state.select("region_idx", "_id", "_value").join(
+            cur.select("region_idx", "cx", "cy", "radius", "perimeter"),
+            "region_idx")
+
+
+# cell offsets: the home cell and the 8 cells around it
+_HALO = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
+# the columns a ghost carries
+_GHOST = ("region_idx", "cx", "cy", "radius")
+
+
+def _halo(schema, size: float, nparts: int):
+    """Generator column over state rows of ``schema``: every region in
+    its home cell (``owned``) and in the 8 cells around it as a ghost
+    carrying only region_idx, position and radius; cells have side
+    ``size`` and ``_bucket`` = pmod(hash(cell), nparts) groups them for
+    the exchange. One SQL expression, so that building it per iteration
+    costs one call into the JVM rather than one per column."""
+    side = f"CAST('{float(size)!r}' AS DOUBLE)"
+    rows = []
+    for dx, dy in _HALO:
+        gx, gy = f"floor(cx / {side}) + {dx}", f"floor(cy / {side}) + {dy}"
+        owned = dx == 0 and dy == 0
+        fields = [f"'{c}', {c}" if owned or c in _GHOST else
+                  f"'{c}', CAST(NULL AS {schema[c].dataType.simpleString()})"
+                  for c in schema.names]
+        fields += [f"'gx', {gx}", f"'gy', {gy}",
+                   f"'owned', {str(owned).lower()}",
+                   f"'_bucket', pmod(hash({gx}, {gy}), {nparts})"]
+        rows.append(f"named_struct({', '.join(fields)})")
+    return F.expr(f"inline(array({', '.join(rows)}))")

@@ -15,6 +15,8 @@ single-group applyInPandas for the exact-parity mode, and be unit-tested
 without a SparkSession. ``reference_layout`` is that mode end to end:
 Queen borders (``operators.borders.queen_borders``), centroids,
 perimeters, radius calibration and the sweep, all in one task.
+``halo_step`` is the scalable mode's synchronous (Jacobi) step over a
+bucket of grid cells, vectorised; ``jacobi_step`` is its scalar oracle.
 """
 
 from __future__ import annotations
@@ -159,12 +161,103 @@ def dorling_sweep(x: np.ndarray, y: np.ndarray, radius: np.ndarray,
     return x, y
 
 
+def halo_step(gx, gy, owned, idx, x, y, radius, perimeter, edges,
+              ratio: float, friction: float, widest: float):
+    """One synchronous (Jacobi) step for the regions owned by a set of
+    halo cells — the scalable mode's force kernel, vectorised.
+
+    Each row is one region's copy in one grid cell ``(gx, gy)`` of side
+    2·widest, the largest interaction distance: its home cell
+    (``owned``) or one of the 8 cells around it (a ghost). Every cell
+    present must hold all of its rows, so an owned region sees every
+    region it can interact with in its home cell. ``perimeter`` is read
+    on owned rows only; ``edges`` is the owned regions' Queen borders as
+    ``(focal, neighbor, weight)`` region indices.
+
+    The arithmetic is ``jacobi_step``'s, term for term, and each
+    region's forces are summed in ascending neighbour ``idx``, so the
+    result does not depend on how cells are grouped. Returns the new
+    ``(x, y)`` of the owned rows, in their input order."""
+    idx = np.asarray(idx, dtype="i8")
+    if not np.any(owned):
+        return np.empty(0), np.empty(0)
+    order = np.lexsort((idx, gy, gx))
+    gx, gy, idx = np.asarray(gx)[order], np.asarray(gy)[order], idx[order]
+    owned = np.asarray(owned, dtype=bool)[order]
+    x, y, radius, perimeter = (np.asarray(a, dtype="f8")[order]
+                               for a in (x, y, radius, perimeter))
+    # pairs: every owned row against every row of its cell, the
+    # neighbours of one focal in ascending idx
+    first = np.r_[True, (gx[1:] != gx[:-1]) | (gy[1:] != gy[:-1])]
+    start = np.flatnonzero(first)
+    cell = np.cumsum(first) - 1
+    size = np.diff(np.r_[start, len(idx)])
+    foc = np.flatnonzero(owned)
+    cnt = size[cell[foc]]
+    f = np.repeat(foc, cnt)
+    nb = (np.repeat(start[cell[foc]], cnt) + np.arange(cnt.sum())
+          - np.repeat(np.cumsum(cnt) - cnt, cnt))
+    dx, dy = x[nb] - x[f], y[nb] - y[f]
+    d = np.hypot(dx, dy)
+    keep = (d > 0.0) & (d < widest + radius[f])
+    f, nb, dx, dy, d = f[keep], nb[keep], dx[keep], dy[keep], d[keep]
+
+    ov = (radius[nb] + radius[f]) - d
+    w, has_w = _edge_weights(idx, idx[f], idx[nb], edges)
+    att = np.where(has_w, np.abs(ov) * w / perimeter[f], ov)
+    rep = ov > 0.0
+    # bincount adds its weights in input order, so each sum is the
+    # sequential one jacobi_step computes
+    fo = (np.cumsum(owned) - 1)[f]
+    m = len(foc)
+    xr = np.bincount(fo[rep], -(ov * dx / d)[rep], m)
+    yr = np.bincount(fo[rep], -(ov * dy / d)[rep], m)
+    xa = np.bincount(fo[~rep], (att * dx / d)[~rep], m)
+    ya = np.bincount(fo[~rep], (att * dy / d)[~rep], m)
+    mind = np.full(m, np.inf)
+    np.minimum.at(mind, fo, d)
+    closest = np.where(mind > widest, widest, mind)
+
+    rd, ad = np.hypot(xr, yr), np.hypot(xa, ya)
+    clamp = rd > closest
+    xr = np.where(clamp, closest * xr / (rd + 1.0), xr)
+    yr = np.where(clamp, closest * yr / (rd + 1.0), yr)
+    rd = np.where(clamp, closest, rd)
+    aclamp = ad > closest
+    xt = np.where(rd > 0.0,
+                  (1.0 - ratio) * xr + ratio * (rd * xa / (ad + 1.0)),
+                  np.where(aclamp, closest * xa / (ad + 1.0), xa))
+    yt = np.where(rd > 0.0,
+                  (1.0 - ratio) * yr + ratio * (rd * ya / (ad + 1.0)),
+                  np.where(aclamp, closest * ya / (ad + 1.0), ya))
+    back = np.argsort(order[foc])
+    return (x[foc] + friction * xt)[back], (y[foc] + friction * yt)[back]
+
+
+def _edge_weights(idx, pf, pn, edges):
+    """Weight of each (pf, pn) pair in ``edges`` and whether it is an
+    edge at all. Region indices are ranked among ``idx`` so that one
+    int64 key orders the pairs; a sentinel key ends the sorted edges."""
+    uniq = np.unique(idx)
+    ef, en = (np.asarray(a, dtype="i8") for a in edges[:2])
+    rf, rn = (np.searchsorted(uniq, a).clip(max=len(uniq) - 1)
+              for a in (ef, en))
+    known = (uniq[rf] == ef) & (uniq[rn] == en)
+    ekey = rf[known] * len(uniq) + rn[known]
+    order = np.argsort(ekey, kind="stable")
+    ekey = np.r_[ekey[order], np.iinfo("i8").max]
+    ew = np.r_[np.asarray(edges[2], dtype="f8")[known][order], 0.0]
+    pkey = np.searchsorted(uniq, pf) * len(uniq) + np.searchsorted(uniq, pn)
+    at = np.searchsorted(ekey, pkey)
+    return ew[at], ekey[at] == pkey
+
+
 def jacobi_step(x: np.ndarray, y: np.ndarray, radius: np.ndarray,
                 perimeter: np.ndarray, wmap: dict,
                 ratio: float, friction: float, widest: float):
     """One synchronous (Jacobi) iteration — all forces computed against the
-    same snapshot, then all positions updated. Used by tests as the local
-    oracle for the distributed scalable mode."""
+    same snapshot, then all positions updated. The scalar oracle the
+    tests hold ``halo_step`` and the distributed scalable mode to."""
     n = len(x)
     nx, ny = x.copy(), y.copy()
     for idx in range(n):

@@ -6,7 +6,7 @@ import math
 import numpy as np
 import pytest
 
-from ecmm428_pycart_spark import Cartogram
+from ecmm428_pycart_spark import Cartogram, get_borders
 from ecmm428_pycart_spark.geometry import core
 from ecmm428_pycart_spark.plans import dorling_core
 
@@ -80,36 +80,77 @@ def test_scalable_matches_jacobi_oracle_at_scale(spark, grid_df):
         assert abs(out[i]["cx"] - cents[i][0]) < iters * widest
 
 
-def test_scalable_dorling_shuffle_join_fallback_matches_broadcast(
-        spark, monkeypatch):
-    """Above _BROADCAST_REGIONS the per-iteration borders/forces joins
-    fall back from broadcast to shuffle hash joins — the path a real
-    100 TB run takes, which the default tests never exercise. Forcing
-    the threshold to 0 must reproduce the broadcast path's positions
-    to near machine precision. NOT bit-for-bit: the per-focal
-    groupBy(sum) accumulates float forces in partition order, which
-    differs across join strategies, so the last ULP can move —
-    Jacobi is mathematically partitioning-independent, IEEE addition
-    is not associative."""
-    from ecmm428_pycart_spark.benchmarks.geo_queries import _grid
-    from ecmm428_pycart_spark.plans.cartogram import Cartogram
+def test_scalable_dorling_is_partition_independent(spark):
+    """Forces are summed in ascending neighbour region_idx inside the
+    kernel, so neither the bucket count (spark.sql.shuffle.partitions)
+    nor AQE may move a single bit of the output. The map and its
+    borders are materialised once, under the session's settings, so
+    that only the Dorling call sees the changed ones."""
+    from tests.test_dorling_reference import _SCHEMA, _lattice_rows
 
-    def run():
-        cart = Cartogram(_grid(spark, "/root/testdata/sf0.001"),
-                         "value", "n_name", idx_field="region_idx")
-        out = cart.dorling(iterations=3, mode="scalable")
-        return sorted(
-            (r["n_name"], r["cx"], r["cy"], r["radius"])
-            for r in out.select("n_name", "cx", "cy", "radius").collect())
+    regions = spark.createDataFrame(
+        _lattice_rows(11, cols=12, rows=10, island=True),
+        _SCHEMA).localCheckpoint(eager=True)
+    borders = get_borders(regions, "name", idx_field="region_idx")[0] \
+        .localCheckpoint(eager=True)
 
-    base = run()
-    monkeypatch.setattr(Cartogram, "_BROADCAST_REGIONS", 0)
-    fallback = run()
-    assert [r[0] for r in fallback] == [r[0] for r in base]
-    for (_, bx, by, br), (_, fx, fy, fr) in zip(base, fallback):
-        assert fx == pytest.approx(bx, rel=1e-12, abs=1e-12)
-        assert fy == pytest.approx(by, rel=1e-12, abs=1e-12)
-        assert fr == br  # radii are never re-accumulated, stay exact
+    def run(parts, aqe):
+        conf = spark.conf
+        saved = {k: conf.get(k) for k in ("spark.sql.shuffle.partitions",
+                                          "spark.sql.adaptive.enabled")}
+        conf.set("spark.sql.shuffle.partitions", str(parts))
+        conf.set("spark.sql.adaptive.enabled", str(aqe).lower())
+        try:
+            out = Cartogram(regions, "Population", "name",
+                            idx_field="region_idx", borders=borders) \
+                .dorling(iterations=3, mode="scalable")
+            return sorted(tuple(r) for r in out.select(
+                "name", "cx", "cy", "radius").collect())
+        finally:
+            for k, v in saved.items():
+                conf.set(k, v)
+
+    base = run(1, True)
+    assert len(base) == 121
+    assert run(7, True) == base
+    assert run(7, False) == base
+    assert run(1, False) == base
+
+
+def test_halo_holds_every_interacting_pair(spark):
+    """Property of the exchange: for every pair with dist < widest + r_i
+    the neighbour has a row in the focal's home cell, and so in its
+    bucket; every region is owned exactly once. Points sit on cell
+    boundaries and at negative coordinates too."""
+    from ecmm428_pycart_spark.plans.cartogram import _halo
+
+    rng = np.random.default_rng(5)
+    n = 400
+    radius = rng.uniform(0.05, 0.5, n)
+    widest = float(radius.max())
+    size = 2.0 * widest
+    x = rng.uniform(-6.0, 6.0, n)
+    y = rng.uniform(-6.0, 6.0, n)
+    x[:40] = np.round(x[:40] / size) * size        # on a cell edge
+    y[20:60] = np.round(y[20:60] / size) * size
+    cur = spark.createDataFrame(
+        [(i, float(x[i]), float(y[i]), float(radius[i]), 4.0)
+         for i in range(n)],
+        "region_idx long, cx double, cy double, radius double, "
+        "perimeter double")
+    rows = cur.select(_halo(cur.schema, size, 7)).select(
+        "region_idx", "gx", "gy", "owned", "_bucket", "perimeter").collect()
+    home = {r["region_idx"]: (r["gx"], r["gy"], r["_bucket"])
+            for r in rows if r["owned"]}
+    assert len(home) == n and sum(r["owned"] for r in rows) == n
+    assert all(r["perimeter"] is None for r in rows if not r["owned"])
+    where = {(r["region_idx"], r["gx"], r["gy"]): r["_bucket"] for r in rows}
+    d = np.hypot(x[:, None] - x[None, :], y[:, None] - y[None, :])
+    pairs = np.argwhere((d > 0) & (d < widest + radius[:, None]))
+    assert len(pairs) > n
+    for f, nb in pairs:
+        gx, gy, bucket = home[f]
+        assert where.get((nb, gx, gy)) == bucket, (f, nb)
 
 
 def test_dorling_lazy_checkpoints_match_eager_and_run_fewer_jobs(
@@ -118,10 +159,10 @@ def test_dorling_lazy_checkpoints_match_eager_and_run_fewer_jobs(
     localCheckpoints compile the identical physical plans (same
     truncation, same partitioning) but defer materialization to the
     terminal action, collapsing the per-stage checkpoint jobs into
-    one. Output must match the eager path to the last ULP (same
-    caveat as the broadcast-fallback test: groupBy float sums are
-    fetch-order sensitive, so approx at 1e-12, radii exact), and the
-    lazy path must demonstrably run FEWER Spark jobs."""
+    one. Output must match the eager path to the last ULP (approx at
+    1e-12: the calibration's float sums are fetch-order sensitive;
+    radii exact), and the lazy path must demonstrably run FEWER Spark
+    jobs."""
     from ecmm428_pycart_spark.plans.cartogram import Cartogram
 
     def run(tag, eager_off):
@@ -150,10 +191,10 @@ def test_dorling_lazy_checkpoints_match_eager_and_run_fewer_jobs(
         assert lx == pytest.approx(ex, rel=1e-12, abs=1e-12)
         assert ly == pytest.approx(ey, rel=1e-12, abs=1e-12)
         assert lr == er
-    # eager runs one blocking job per checkpoint (base, borders, state,
-    # one per iteration) ON TOP of the jobs both arms share (the setup
-    # collect, one broadcast-collect per broadcast join per iteration,
-    # doCheckpoint backfill, the terminal action) — so the pin is
-    # strictly-fewer, not an absolute count.
+    # eager runs one blocking job per checkpoint (base, borders, the
+    # weighted state, one per iteration) ON TOP of the jobs both arms
+    # share (the regions checkpoint, the setup collect, one map stage
+    # per exchange, the terminal action) — so the pin is strictly-fewer,
+    # not an absolute count.
     assert lazy_jobs < eager_jobs, (
         f"lazy dorling must run fewer jobs ({lazy_jobs} vs {eager_jobs})")

@@ -64,7 +64,7 @@ def profile_g08(spark, sf_dir):
         cart = Cartogram(grid, "value", "region_idx",
                          idx_field="region_idx")
         state, borders, widest = cart._dorling_setup(
-            materialize_borders=True)
+            scalable=True)
         return state.count()
 
     clock("1_setup_only", setup_only)
