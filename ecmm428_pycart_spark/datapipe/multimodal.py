@@ -514,7 +514,10 @@ def decode_png_pixels(b: bytes) -> np.ndarray:
 
     Corruption discipline (round 9): a damaged IDAT stream or chunk
     layout surfaces as diagnostic ValueError, never bare zlib.error /
-    struct.error / IndexError."""
+    struct.error / IndexError. The inflated IDAT length is checked
+    against the IHDR dimensions (per pass for Adam7) before any pixel
+    buffer is allocated, so a corrupt width or height raises instead
+    of sizing a buffer the payload cannot fill."""
     import zlib as _z
     try:
         return _decode_png_inner(b)
@@ -561,13 +564,17 @@ def _decode_png_inner(b: bytes) -> np.ndarray:
         plane, end = _png_unfilter(raw, 0, width, height, bpp)
         out = _png_assemble(plane, height, width, ch, sbytes)
     else:
+        passes = [(x0, y0, dx, dy, (width - x0 + dx - 1) // dx,
+                   (height - y0 + dy - 1) // dy)
+                  for (x0, y0, dx, dy) in _ADAM7]
+        passes = [p for p in passes if p[4] > 0 and p[5] > 0]
+        # size check before the allocation: a corrupt IHDR must not
+        # size a buffer that its IDAT cannot fill
+        if len(raw) != sum(hp * (wp * bpp + 1) for *_, wp, hp in passes):
+            raise ValueError("IDAT length does not match dimensions")
         out = np.zeros((height, width, ch), dtype=dtype)
         pos = 0
-        for (x0, y0, dx, dy) in _ADAM7:
-            wp = (width - x0 + dx - 1) // dx
-            hp = (height - y0 + dy - 1) // dy
-            if wp <= 0 or hp <= 0:
-                continue
+        for (x0, y0, dx, dy, wp, hp) in passes:
             sub, pos = _png_unfilter(raw, pos, wp, hp, bpp)
             out[y0::dy, x0::dx] = _png_assemble(sub, hp, wp, ch, sbytes)
         end = pos
@@ -3221,11 +3228,13 @@ def qoi_bytes_rgb(arr: np.ndarray) -> bytes:
 def decode_qoi_pixels(b: bytes) -> np.ndarray:
     """Decode a QOI stream to (h, w, 3) uint8 (alpha dropped; RGBA
     streams decode, their alpha feeds the index hash as the spec
-    requires). Raises on bad magic, bad channel count, a run
-    overrunning the pixel count, or a missing end marker — container
-    mistakes surface loudly instead of yielding shifted pixels. Short
-    reads and corrupt op bytes surface as diagnostic ValueError, never
-    bare IndexError (round-9 corruption discipline)."""
+    requires). Raises on bad magic, bad channel count, a header whose
+    dimensions exceed what its payload can encode (checked before the
+    pixel buffer is allocated), a run overrunning the pixel count, or
+    a missing end marker — container mistakes surface loudly instead
+    of yielding shifted pixels. Short reads and corrupt op bytes
+    surface as diagnostic ValueError, never bare IndexError (round-9
+    corruption discipline)."""
     try:
         return _decode_qoi_inner(b)
     except (IndexError, struct.error) as e:
@@ -3239,6 +3248,11 @@ def _decode_qoi_inner(b: bytes) -> np.ndarray:
     if channels not in (3, 4):
         raise ValueError(f"unsupported QOI channel count {channels}")
     n = w * h
+    # every op is >= 1 byte and yields <= 62 pixels (a RUN of 1..62;
+    # 0xFE/0xFF are RGB/RGBA), and the 8-byte end marker is required
+    if n > 62 * max(len(b) - 14 - len(_QOI_END), 0):
+        raise ValueError(f"QOI header {w}x{h} exceeds what its "
+                         f"{len(b)}-byte stream can encode")
     out = np.empty((n, 3), np.uint8)
     index = [(0, 0, 0, 0)] * 64
     px = (0, 0, 0, 255)

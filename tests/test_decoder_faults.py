@@ -266,6 +266,50 @@ def test_gif_invalid_min_code_size_raises_fast():
     assert time.time() - t0 < 0.1
 
 
+def test_qoi_header_beyond_payload_raises_fast():
+    """A flipped high width bit turns a 4x4 QOI into a (2^31+4)x4
+    header: 24 GiB of pixels from a 50-byte stream. The decoder must
+    refuse the header before allocating (each op is >= 1 byte and
+    yields <= 62 pixels), whatever the host's memory."""
+    import time
+
+    b = bytearray(M.qoi_bytes_rgb(
+        np.arange(48, dtype=np.uint8).reshape(4, 4, 3)))
+    assert b[4:8] == b"\x00\x00\x00\x04"
+    b[4] ^= 0x80
+    t0 = time.time()
+    with pytest.raises(ValueError, match="QOI"):
+        M.decode_qoi_pixels(bytes(b))
+    assert time.time() - t0 < 0.1
+
+
+def test_qoi_payload_bound_admits_62_pixels_per_op_byte():
+    """The bound is tight, not lossy: a 62x4 image of the start pixel
+    encodes as 4 full RUN bytes (248 = 62*4 pixels) and decodes."""
+    arr = np.zeros((4, 62, 3), dtype=np.uint8)
+    q = M.qoi_bytes_rgb(arr)
+    assert len(q) == 14 + 4 + 8
+    assert np.array_equal(M.decode_qoi_pixels(q), arr)
+
+
+def test_adam7_png_header_beyond_payload_raises_fast():
+    """The interlaced PNG path sized its (h, w, ch) buffer from IHDR
+    before comparing the IDAT length: a flipped high width bit in an
+    8x8 Adam7 palette PNG asked for 16 GiB. The per-pass length check
+    now comes first."""
+    import time
+
+    idx = [[(3 * x + y) % 5 for x in range(8)] for y in range(8)]
+    p = bytearray(M.png_bytes_palette(
+        8, 8, [(40 + 11 * j,) * 3 for j in range(5)], idx, interlace=True))
+    assert p[12:16] == b"IHDR" and p[16:20] == b"\x00\x00\x00\x08"
+    p[16] ^= 0x80
+    t0 = time.time()
+    with pytest.raises(ValueError, match="IDAT length"):
+        M.decode_png_pixels(bytes(p))
+    assert time.time() - t0 < 0.1
+
+
 def test_gzip_and_protobuf_truncation_contracts():
     """Formats with NO top-level framing: a cut at a member/field
     boundary is indistinguishable from a complete shorter stream (the
