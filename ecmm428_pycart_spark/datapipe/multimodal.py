@@ -3898,13 +3898,19 @@ def decode_tga_pixels(buf: bytes):
     """Decode a type-10 24-bit TGA to a logical top-down (h, w, 3)
     RGB uint8 array + (n_rle, n_raw) packet counts. Validates the
     header fields this codec owns, refuses packets that cross a scan
-    line, and requires exact byte conservation (no trailing bytes)."""
+    line, and requires exact byte conservation (no trailing bytes).
+    A header whose rows cannot fit the payload is refused before the
+    pixel buffer is allocated: packets do not cross scan lines and each
+    is >= 4 bytes for <= 128 pixels, so a row of w pixels takes at
+    least 4 * ceil(w / 128) bytes."""
     if len(buf) < 18:
         raise ValueError("tga: truncated header")
     (idl, cmt, ityp, _cf, _cl, _ce, _xo, _yo, w, h, bpp,
      desc) = struct.unpack("<BBBHHBHHHHBB", buf[:18])
     if idl != 0 or cmt != 0 or ityp != 10 or bpp != 24:
         raise ValueError("tga: unsupported variant")
+    if h * 4 * -(-w // 128) > len(buf) - 18:
+        raise ValueError("tga: header dimensions exceed the packet stream")
     px = np.zeros((h, w, 3), np.uint8)
     pos, n_rle, n_raw = 18, 0, 0
     for y in range(h):

@@ -17,20 +17,24 @@ constructor (pycart/cartogram.py:142-170) and exposes:
     distributed setup; two Spark jobs per call (three with ``borders``)
     and one more to read the circle polygons. Bounded by one executor
     (fine: reference workloads are ≤ ~400 regions).
-  * ``mode='scalable'`` — synchronous Jacobi iteration, one exchange
-    per step: every region goes to its grid cell (side 2·widest) and,
-    as a ghost, to the 8 cells around it; one applyInPandas per bucket
-    of cells runs the vectorised force kernel
-    (``dorling_core.halo_step``), and a lazy localCheckpoint per step
-    truncates lineage. Safe at cluster scale; documented deviation from
-    the reference's order-dependent updates (converges to an equivalent
+  * ``mode='scalable'`` — synchronous Jacobi iteration, K =
+    min(iterations left, ``K_MAX``) steps per exchange: every region
+    goes to its grid cell and, as a ghost, to the 8 cells around it;
+    the cell side is the K-step dependency radius that the per-step
+    movement bound gives (``dorling_core.halo_reach``: 2·widest at
+    K = 1, 5·widest at K = 2 with the defaults). One applyInPandas per
+    bucket of cells runs the vectorised K-step force kernel
+    (``dorling_core.halo_step``), the id and value ride on owned rows
+    so nothing is joined back, and a lazy localCheckpoint per exchange
+    truncates lineage. Positions equal iterated ``jacobi_step`` bit for
+    bit. Safe at cluster scale; documented deviation from the
+    reference's order-dependent updates (converges to an equivalent
     layout).
 """
 
 from __future__ import annotations
 
 import math
-import os
 
 import numpy as np
 import pandas as pd
@@ -50,24 +54,14 @@ from ecmm428_pycart_spark.plans import dorling_core
 
 
 def _ckpt(df: DataFrame) -> DataFrame:
-    """Plan-truncating localCheckpoint, LAZY by default (r14 "fewer
-    jobs" lever): eager=False compiles the physical plan and wraps its
-    (persisted) RDD exactly like eager=True — same LogicalRDD, same
-    lineage truncation, so the per-iteration 3^k plan blowup the r12
-    cadence probe measured cannot return — but defers materialization
-    to the query's terminal action. The N checkpoint jobs a dorling
-    call used to run (one per setup stage + one per Jacobi iteration)
-    collapse into that one job, whose stages read each intermediate
-    from the persist-on-first-compute cache; per-round driver job
-    latency (the measured dorling wall: the r13 profile put g08's 3
-    iterations at ~0.8-2.3s against ~0.2-1s/round scheduling latency
-    under contention) is paid once, not N times. Results are
-    byte-identical: the compiled plans, partitioning and float
-    accumulation orders are unchanged — only WHEN the same RDDs run.
-    ``SPARK_GRAFT_DORLING_LAZYCKPT_OFF=1`` restores the eager
-    per-stage jobs (the A/B arm)."""
-    eager = os.environ.get("SPARK_GRAFT_DORLING_LAZYCKPT_OFF") == "1"
-    return df.localCheckpoint(eager=eager)
+    """Plan-truncating lazy localCheckpoint: the physical plan is
+    compiled and its (persisted) RDD wrapped exactly as an eager
+    checkpoint would, so the plan stays O(1) deep across Jacobi
+    exchanges, but nothing runs until the query's terminal action,
+    whose stages read each intermediate from the persist-on-first-
+    compute cache. One job where an eager checkpoint per set-up stage
+    and per exchange would each block the driver."""
+    return df.localCheckpoint(eager=False)
 
 
 # exact sum type for the radius calibration: 20 integer digits, 18
@@ -131,12 +125,14 @@ class Cartogram:
 
         The anchor (max density) stays in-plan via a broadcast 1-row
         cross-join — no unpartitioned window, no driver round-trip, so the
-        whole thing is one Catalyst DAG that scales.
+        whole thing is one Catalyst DAG that scales. Both branches read
+        the density through one lazy checkpoint, so the area UDF runs
+        once per region, not once per branch.
         """
         v, i, g = self.value_field, self.id_field, self.geo_field
-        geodf = (self.df.select(v, i, g)
-                 .withColumn("_area", st_area(F.col(g)))
-                 .withColumn("density", F.col(v) / F.col("_area")))
+        geodf = _ckpt(self.df.select(v, i, g)
+                      .withColumn("_area", st_area(F.col(g)))
+                      .withColumn("density", F.col(v) / F.col("_area")))
         anchor = geodf.agg(F.max("density").alias("_anchor"))
         return (
             geodf.crossJoin(F.broadcast(anchor))
@@ -319,40 +315,44 @@ class Cartogram:
 
     def _dorling_scalable(self, state, borders, widest,
                           iterations, ratio, friction, stop):
-        """Synchronous Jacobi iteration, one exchange per step.
+        """Synchronous Jacobi iteration, up to ``K_MAX`` steps per
+        exchange.
 
-        Grid cells have side 2·widest, the largest interaction distance.
-        Each step sends every region to its home cell and, as a ghost
-        carrying only its position and radius, to the 8 cells around it
-        (``_halo``), so an owned region finds every region it can touch
-        in its own cell. Cells are grouped into ``spark.sql.shuffle.
-        partitions`` buckets; one applyInPandas per bucket runs the
-        vectorised kernel ``dorling_core.halo_step`` (grouping by cell
-        instead pays pandas overhead per cell: ~3x slower measured).
-        Forces are summed in ascending neighbour region_idx, so positions
-        do not depend on partitioning or AQE. Each owned region's Queen
-        weights ride along as two array columns, attached once here
-        (measured faster than sending edge rows through each exchange);
-        the id and value are joined back after the loop. The lazy
-        localCheckpoint per step (``_ckpt``) keeps the plan O(1) deep.
+        An exchange of K steps sends every region to its home cell and,
+        as a ghost, to the 8 cells around it (``_halo``); cells have
+        side ``dorling_core.halo_reach(K, …)[0]``, the farthest a region
+        can sit and still reach an owned region within K steps, so an
+        owned region finds every region it depends on in its own cell.
+        Cells are grouped into ``spark.sql.shuffle.partitions`` buckets;
+        one applyInPandas per bucket runs the vectorised K-step kernel
+        ``dorling_core.halo_step`` (grouping by cell instead pays pandas
+        overhead per cell: ~3x slower measured). Forces are summed in
+        ascending neighbour region_idx, so positions do not depend on
+        partitioning or AQE. Each region's Queen weights ride along as
+        two array columns, attached once here (measured faster than
+        sending edge rows through each exchange), and so do its id and
+        value, on owned rows only, so nothing is joined back after the
+        loop. The lazy localCheckpoint per exchange (``_ckpt``) keeps
+        the plan O(1) deep.
         """
         nparts = int(state.sparkSession.conf.get(
             "spark.sql.shuffle.partitions"))
-        size = 2.0 * widest
         # weights attached in one exchange: region rows and edge rows
         # grouped by region, each column taken from the rows that carry it
-        cols = ["cx", "cy", "radius", "perimeter"]
+        cols = ["_id", "_value", "cx", "cy", "radius", "perimeter"]
         rows = state.select("region_idx", *cols,
                             F.lit(None).cast("struct<neighbor:bigint,"
                                              "weight:double>").alias("_e"))
         rows = rows.unionByName(borders.select(
             F.col("focal").alias("region_idx"),
-            *[F.lit(None).cast("double").alias(c) for c in cols],
+            *[F.lit(None).cast(t).alias(c) for c, t in
+              state.select(*cols).dtypes],
             F.struct(F.col("neighbor").cast("long").alias("neighbor"),
                      F.col("weight").cast("double").alias("weight"))
             .alias("_e")))
         cur = _ckpt(rows.groupBy("region_idx")
-                    .agg(*[F.max(c).alias(c) for c in cols],
+                    .agg(*[F.first(c, ignorenulls=True).alias(c)
+                           for c in cols],
                          F.collect_list("_e").alias("_e"))
                     .filter(F.col("cx").isNotNull())
                     .select("region_idx", *cols,
@@ -360,48 +360,59 @@ class Cartogram:
                             F.col("_e.weight").alias("_wt")))
         schema = cur.schema
 
-        def step(pdf):
-            own = pdf["owned"].to_numpy()
-            mine = pdf[own]
-            edges = (np.repeat(mine["region_idx"].to_numpy(),
-                               mine["_nb"].map(len)),
-                     np.concatenate([*mine["_nb"], np.empty(0, "i8")]),
-                     np.concatenate([*mine["_wt"], np.empty(0)]))
-            x, y = dorling_core.halo_step(
-                pdf["gx"], pdf["gy"], own, pdf["region_idx"], pdf["cx"],
-                pdf["cy"], pdf["radius"], pdf["perimeter"], edges,
-                ratio, friction, widest)
-            return mine[schema.names].assign(cx=x, cy=y)
+        def stepper(k):
+            def step(pdf):
+                own = pdf["owned"].to_numpy()
+                # each region's edges once, however many cells hold it
+                one = pdf[~pdf["region_idx"].duplicated()]
+                edges = (np.repeat(one["region_idx"].to_numpy(),
+                                   one["_nb"].map(len)),
+                         np.concatenate([*one["_nb"], np.empty(0, "i8")]),
+                         np.concatenate([*one["_wt"], np.empty(0)]))
+                x, y = dorling_core.halo_step(
+                    pdf["gx"], pdf["gy"], own, pdf["region_idx"], pdf["cx"],
+                    pdf["cy"], pdf["radius"], pdf["perimeter"], edges, k,
+                    ratio, friction, widest)
+                return pdf.loc[own, schema.names].assign(cx=x, cy=y)
+            return step
 
-        n_iter = iterations if stop is None else min(iterations, stop)
-        halo = _halo(schema, size, nparts)
-        for _ in range(n_iter):
-            cur = _ckpt(cur.select(halo).groupBy("_bucket")
-                        .applyInPandas(step, schema))
-        return state.select("region_idx", "_id", "_value").join(
-            cur.select("region_idx", "cx", "cy", "radius", "perimeter"),
-            "region_idx")
+        left = iterations if stop is None else min(iterations, stop)
+        while left > 0:
+            k = min(left, K_MAX)
+            side = dorling_core.halo_reach(k, ratio, friction, widest)[0]
+            cur = _ckpt(cur.select(_halo(schema, side, nparts))
+                        .groupBy("_bucket")
+                        .applyInPandas(stepper(k), schema))
+            left -= k
+        return cur
 
 
+# Jacobi steps per halo exchange. The cells grow with the steps (side
+# 5·widest at 2 steps, 14 at 4, 44 at 8 with the default ratio and
+# friction) while each step recomputes at most 9 copies of a region.
+# On a 40 × 40 lattice (2 cores, warm, median of 5 interleaved calls)
+# 8 iterations took 5.74 / 3.64 / 2.33 / 1.73 s at 1 / 2 / 4 / 8 steps
+# per exchange, and 2 or 4 iterations the same at 4 and 8.
+K_MAX = 8
 # cell offsets: the home cell and the 8 cells around it
 _HALO = [(dx, dy) for dx in (-1, 0, 1) for dy in (-1, 0, 1)]
-# the columns a ghost carries
-_GHOST = ("region_idx", "cx", "cy", "radius")
+# the columns only an owned row carries
+_OWNED = ("_id", "_value")
 
 
 def _halo(schema, size: float, nparts: int):
     """Generator column over state rows of ``schema``: every region in
     its home cell (``owned``) and in the 8 cells around it as a ghost
-    carrying only region_idx, position and radius; cells have side
-    ``size`` and ``_bucket`` = pmod(hash(cell), nparts) groups them for
-    the exchange. One SQL expression, so that building it per iteration
+    carrying all but its id and value; cells have side ``size`` and
+    ``_bucket`` = pmod(hash(cell), nparts) groups them for the
+    exchange. One SQL expression, so that building it per exchange
     costs one call into the JVM rather than one per column."""
     side = f"CAST('{float(size)!r}' AS DOUBLE)"
     rows = []
     for dx, dy in _HALO:
         gx, gy = f"floor(cx / {side}) + {dx}", f"floor(cy / {side}) + {dy}"
         owned = dx == 0 and dy == 0
-        fields = [f"'{c}', {c}" if owned or c in _GHOST else
+        fields = [f"'{c}', {c}" if owned or c not in _OWNED else
                   f"'{c}', CAST(NULL AS {schema[c].dataType.simpleString()})"
                   for c in schema.names]
         fields += [f"'gx', {gx}", f"'gy', {gy}",

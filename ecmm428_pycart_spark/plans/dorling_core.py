@@ -15,8 +15,10 @@ single-group applyInPandas for the exact-parity mode, and be unit-tested
 without a SparkSession. ``reference_layout`` is that mode end to end:
 Queen borders (``operators.borders.queen_borders``), centroids,
 perimeters, radius calibration and the sweep, all in one task.
-``halo_step`` is the scalable mode's synchronous (Jacobi) step over a
-bucket of grid cells, vectorised; ``jacobi_step`` is its scalar oracle.
+``halo_step`` is the scalable mode's kernel: K synchronous (Jacobi)
+steps over a bucket of grid cells, vectorised, with ``halo_reach`` the
+movement bound that sizes the cells for K; ``jacobi_step`` is its
+scalar oracle.
 """
 
 from __future__ import annotations
@@ -161,55 +163,124 @@ def dorling_sweep(x: np.ndarray, y: np.ndarray, radius: np.ndarray,
     return x, y
 
 
+# relative margin on every halo radius, so that rounding in a distance
+# or in floor(x / side) never drops a pair the exact arithmetic keeps
+_SLACK = 2.0 ** -30
+
+
+def halo_reach(steps: int, ratio: float, friction: float,
+               widest: float) -> np.ndarray:
+    """Dependency radii of ``steps`` Jacobi steps run on one halo
+    exchange: entry t (0..steps) is how far from a grid cell a region
+    may sit at the exchange and still have its position after step t
+    needed by the regions the cell owns. Entry 0 is the cell's side;
+    entry ``steps`` is 0, the owned regions themselves.
+
+    A step moves a region by less than m = |friction|·(|1−ratio| +
+    |ratio|)·widest: the repulsion is clamped to ``closest`` ≤ widest,
+    the attraction term to ratio·that, and a lone attraction to closest.
+    Step t reads positions of step t − 1 within widest + r ≤ 2·widest,
+    which sat within 2·widest + 2(t − 1)·m at the exchange; summing
+    these from the last step back gives the radii."""
+    move = abs(friction) * (abs(1.0 - ratio) + abs(ratio)) * widest
+    need = 2.0 * widest + 2.0 * move * np.arange(steps)
+    return np.r_[np.cumsum(need[::-1])[::-1], 0.0] * (1.0 + _SLACK)
+
+
 def halo_step(gx, gy, owned, idx, x, y, radius, perimeter, edges,
-              ratio: float, friction: float, widest: float):
-    """One synchronous (Jacobi) step for the regions owned by a set of
-    halo cells — the scalable mode's force kernel, vectorised.
+              steps: int, ratio: float, friction: float, widest: float):
+    """``steps`` synchronous (Jacobi) steps for the regions owned by a
+    set of halo cells — the scalable mode's force kernel, vectorised.
 
     Each row is one region's copy in one grid cell ``(gx, gy)`` of side
-    2·widest, the largest interaction distance: its home cell
-    (``owned``) or one of the 8 cells around it (a ghost). Every cell
-    present must hold all of its rows, so an owned region sees every
-    region it can interact with in its home cell. ``perimeter`` is read
-    on owned rows only; ``edges`` is the owned regions' Queen borders as
-    ``(focal, neighbor, weight)`` region indices.
+    ``halo_reach(steps, …)[0]``: its home cell (``owned``) or one of
+    the 8 cells around it (a ghost). Every cell present must hold all
+    of its rows, so it holds every region its owned rows depend on over
+    all the steps. Ghosts are stepped too, so every row carries its
+    perimeter; ``edges`` is the Queen borders of the regions present as
+    ``(focal, neighbor, weight)`` region indices. Cells are stepped
+    independently, and step t only for rows within ``halo_reach(…)[t]``
+    of the cell: a shrinking cone whose rows have every input of the
+    step. Pairs are found on a grid of side 2·widest.
 
     The arithmetic is ``jacobi_step``'s, term for term, and each
     region's forces are summed in ascending neighbour ``idx``, so the
     result does not depend on how cells are grouped. Returns the new
     ``(x, y)`` of the owned rows, in their input order."""
-    idx = np.asarray(idx, dtype="i8")
-    if not np.any(owned):
+    owned = np.asarray(owned, dtype=bool)
+    if not owned.any():
         return np.empty(0), np.empty(0)
-    order = np.lexsort((idx, gy, gx))
-    gx, gy, idx = np.asarray(gx)[order], np.asarray(gy)[order], idx[order]
-    owned = np.asarray(owned, dtype=bool)[order]
-    x, y, radius, perimeter = (np.asarray(a, dtype="f8")[order]
+    gx, gy, idx = (np.asarray(a, dtype="i8") for a in (gx, gy, idx))
+    _, cell = np.unique(np.c_[gx, gy], axis=0, return_inverse=True)
+    cell = cell.ravel()
+    # a cell with no owned row needs no step
+    keep = np.isin(cell, cell[owned])
+    gx, gy, idx, cell, owned = (a[keep] for a in (gx, gy, idx, cell, owned))
+    x, y, radius, perimeter = (np.asarray(a, dtype="f8")[keep]
                                for a in (x, y, radius, perimeter))
-    # pairs: every owned row against every row of its cell, the
-    # neighbours of one focal in ascending idx
-    first = np.r_[True, (gx[1:] != gx[:-1]) | (gy[1:] != gy[:-1])]
-    start = np.flatnonzero(first)
-    cell = np.cumsum(first) - 1
-    size = np.diff(np.r_[start, len(idx)])
-    foc = np.flatnonzero(owned)
-    cnt = size[cell[foc]]
-    f = np.repeat(foc, cnt)
-    nb = (np.repeat(start[cell[foc]], cnt) + np.arange(cnt.sum())
-          - np.repeat(np.cumsum(cnt) - cnt, cnt))
+    reach = halo_reach(steps, ratio, friction, widest)
+    side = reach[0]
+    ox, oy = gx * side, gy * side
+    away = np.hypot(np.maximum(np.maximum(ox - x, x - (ox + side)), 0.0),
+                    np.maximum(np.maximum(oy - y, y - (oy + side)), 0.0))
+    away[owned] = 0.0
+    weight = _edge_weights(idx, edges)
+    live = np.ones(len(idx), dtype=bool)
+    for t in range(1, steps + 1):
+        focal = np.flatnonzero(away <= reach[t])
+        nx, ny = _jacobi_rows(focal, np.flatnonzero(live), cell, ox, oy, idx,
+                              x, y, radius, perimeter, weight, ratio,
+                              friction, widest)
+        x, y = x.copy(), y.copy()
+        x[focal], y[focal] = nx, ny
+        live = away <= reach[t]
+    return x[owned], y[owned]
+
+
+def _jacobi_rows(focal, live, cell, ox, oy, idx, x, y, radius, perimeter,
+                 weight, ratio, friction, widest):
+    """One Jacobi step for rows ``focal`` against the ``live`` rows of
+    their own cell, whose corner is ``(ox, oy)``; returns their new
+    (x, y)."""
+    # pairs: each focal against the live rows of the 3 × 3 grid squares
+    # (side 2·widest) around it in its cell, in ascending neighbour idx.
+    # The squares are counted from the cell's corner, so their keys stay
+    # small however far the map spans.
+    size = 2.0 * widest * (1.0 + _SLACK)
+    sx = np.floor((x - ox) / size).astype("i8")
+    sy = np.floor((y - oy) / size).astype("i8")
+    x0, y0 = sx[live].min() - 1, sy[live].min() - 1
+    span_x, span_y = sx[live].max() - x0 + 2, sy[live].max() - y0 + 2
+
+    def key(r, dx, dy):
+        return ((cell[r] * span_x + sx[r] + dx - x0) * span_y
+                + sy[r] + dy - y0)
+
+    order = np.lexsort((idx[live], sy[live], sx[live], cell[live]))
+    rows = live[order]
+    skey = key(rows, 0, 0)
+    q = np.concatenate([key(focal, dx, dy)
+                        for dx in (-1, 0, 1) for dy in (-1, 0, 1)])
+    lo = np.searchsorted(skey, q, "left")
+    cnt = np.searchsorted(skey, q, "right") - lo
+    f = np.repeat(np.tile(focal, 9), cnt)
+    nb = rows[np.repeat(lo, cnt) + np.arange(cnt.sum())
+              - np.repeat(np.cumsum(cnt) - cnt, cnt)]
+    by = np.lexsort((idx[nb], f))
+    f, nb = f[by], nb[by]
     dx, dy = x[nb] - x[f], y[nb] - y[f]
     d = np.hypot(dx, dy)
-    keep = (d > 0.0) & (d < widest + radius[f])
-    f, nb, dx, dy, d = f[keep], nb[keep], dx[keep], dy[keep], d[keep]
+    hit = (d > 0.0) & (d < widest + radius[f])
+    f, nb, dx, dy, d = f[hit], nb[hit], dx[hit], dy[hit], d[hit]
 
     ov = (radius[nb] + radius[f]) - d
-    w, has_w = _edge_weights(idx, idx[f], idx[nb], edges)
+    w, has_w = weight(idx[f], idx[nb])
     att = np.where(has_w, np.abs(ov) * w / perimeter[f], ov)
     rep = ov > 0.0
     # bincount adds its weights in input order, so each sum is the
     # sequential one jacobi_step computes
-    fo = (np.cumsum(owned) - 1)[f]
-    m = len(foc)
+    fo = np.searchsorted(focal, f)
+    m = len(focal)
     xr = np.bincount(fo[rep], -(ov * dx / d)[rep], m)
     yr = np.bincount(fo[rep], -(ov * dy / d)[rep], m)
     xa = np.bincount(fo[~rep], (att * dx / d)[~rep], m)
@@ -230,14 +301,13 @@ def halo_step(gx, gy, owned, idx, x, y, radius, perimeter, edges,
     yt = np.where(rd > 0.0,
                   (1.0 - ratio) * yr + ratio * (rd * ya / (ad + 1.0)),
                   np.where(aclamp, closest * ya / (ad + 1.0), ya))
-    back = np.argsort(order[foc])
-    return (x[foc] + friction * xt)[back], (y[foc] + friction * yt)[back]
+    return x[focal] + friction * xt, y[focal] + friction * yt
 
 
-def _edge_weights(idx, pf, pn, edges):
-    """Weight of each (pf, pn) pair in ``edges`` and whether it is an
-    edge at all. Region indices are ranked among ``idx`` so that one
-    int64 key orders the pairs; a sentinel key ends the sorted edges."""
+def _edge_weights(idx, edges):
+    """Lookup ``(pf, pn) -> (weight, is an edge)`` over ``edges``.
+    Region indices are ranked among ``idx`` so that one int64 key
+    orders the pairs; a sentinel key ends the sorted edges."""
     uniq = np.unique(idx)
     ef, en = (np.asarray(a, dtype="i8") for a in edges[:2])
     rf, rn = (np.searchsorted(uniq, a).clip(max=len(uniq) - 1)
@@ -247,9 +317,13 @@ def _edge_weights(idx, pf, pn, edges):
     order = np.argsort(ekey, kind="stable")
     ekey = np.r_[ekey[order], np.iinfo("i8").max]
     ew = np.r_[np.asarray(edges[2], dtype="f8")[known][order], 0.0]
-    pkey = np.searchsorted(uniq, pf) * len(uniq) + np.searchsorted(uniq, pn)
-    at = np.searchsorted(ekey, pkey)
-    return ew[at], ekey[at] == pkey
+
+    def weight(pf, pn):
+        pkey = (np.searchsorted(uniq, pf) * len(uniq)
+                + np.searchsorted(uniq, pn))
+        at = np.searchsorted(ekey, pkey)
+        return ew[at], ekey[at] == pkey
+    return weight
 
 
 def jacobi_step(x: np.ndarray, y: np.ndarray, radius: np.ndarray,

@@ -63,6 +63,31 @@ def test_non_contiguous_golden(spark, squares_df):
     assert core.centroid(g) == pytest.approx(core.centroid(og), abs=1e-8)
 
 
+def test_non_contiguous_evaluates_area_once_per_region(spark, squares_df,
+                                                      monkeypatch):
+    """The anchor aggregate and the scaled rows both need each region's
+    density; the area UDF behind it must run once per region, not once
+    per branch. Counted by a stand-in UDF that adds its batch sizes to
+    an accumulator."""
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from ecmm428_pycart_spark.plans import cartogram
+
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.pandas_udf(T.DoubleType())
+    def counted_area(wkb: pd.Series) -> pd.Series:
+        calls.add(len(wkb))
+        return wkb.map(lambda b: core.area(core.loads(b)))
+
+    monkeypatch.setattr(cartogram, "st_area", counted_area)
+    rows = Cartogram(squares_df, "Population", "name").non_contiguous() \
+        .collect()
+    assert len(rows) == 4
+    assert calls.value == 4
+
+
 def test_non_contiguous_size_value(spark, squares_df):
     cart = Cartogram(squares_df, "Population", "name")
     out = {r["name"]: r["scale"] for r in cart.non_contiguous(size_value=2.0).collect()}

@@ -310,6 +310,35 @@ def test_adam7_png_header_beyond_payload_raises_fast():
     assert time.time() - t0 < 0.1
 
 
+def test_tga_header_beyond_payload_raises_fast():
+    """A 26-byte TGA (one 1-pixel RLE packet) whose header says
+    65535x4096 sized a 768 MiB buffer before reading a packet. Every
+    packet is >= 4 bytes for <= 128 pixels and none crosses a row, so
+    the header is refused against the payload first."""
+    import struct
+    import time
+
+    b = bytearray(M.tga_bytes_rle(np.zeros((1, 1, 3), dtype=np.uint8)))
+    assert len(b) == 22
+    b[12:16] = struct.pack("<HH", 65535, 4096)
+    b += bytes(4)
+    t0 = time.time()
+    with pytest.raises(ValueError, match="tga: header dimensions"):
+        M.decode_tga_pixels(bytes(b))
+    assert time.time() - t0 < 0.1
+
+
+def test_tga_payload_bound_admits_128_pixels_per_packet():
+    """The bound is tight, not lossy: a 256x3 image of one colour is
+    two 4-byte RLE packets per row, exactly 4 * ceil(w / 128) bytes a
+    row, and decodes."""
+    arr = np.full((3, 256, 3), 7, dtype=np.uint8)
+    t = M.tga_bytes_rle(arr, top_down=True)
+    assert len(t) == 18 + 3 * 2 * 4
+    px, n_rle, n_raw = M.decode_tga_pixels(t)
+    assert np.array_equal(px, arr) and (n_rle, n_raw) == (6, 0)
+
+
 def test_gzip_and_protobuf_truncation_contracts():
     """Formats with NO top-level framing: a cut at a member/field
     boundary is indistinguishable from a complete shorter stream (the

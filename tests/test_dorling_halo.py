@@ -1,8 +1,9 @@
-"""The scalable mode's vectorised force kernel (dorling_core.halo_step)
-against the scalar Jacobi oracle (dorling_core.jacobi_step), without
-Spark: every region is placed in its home cell and, as a ghost, in the
-8 cells around it, cells are dealt into buckets, and the kernel runs
-once per bucket."""
+"""The scalable mode's vectorised K-step force kernel
+(dorling_core.halo_step) against the scalar Jacobi oracle
+(dorling_core.jacobi_step), and the movement bound that sizes its halo
+(dorling_core.halo_reach), without Spark: every region is placed in its
+home cell and, as a ghost, in the 8 cells around it, cells are dealt
+into buckets, and the kernel runs once per bucket."""
 
 import numpy as np
 import pytest
@@ -47,14 +48,21 @@ def _jittered_map(seed, side, extras=True):
 
 
 def _halo_steps(x, y, radius, perimeter, edges, widest, nbuckets,
-                iterations):
-    """``iterations`` kernel steps over halo rows dealt into
-    ``nbuckets`` buckets; returns the new positions by region index."""
+                iterations, steps=2, ratio=RATIO, friction=FRICTION):
+    """``iterations`` Jacobi steps, ``steps`` per exchange: each exchange
+    places every region in its home cell and, as a ghost, in the 8
+    cells around it (side ``halo_reach(k)[0]``), deals the cells into
+    ``nbuckets`` buckets and runs the kernel once per bucket. Returns
+    the new positions by region index and the home cell of every region
+    at the start and the end of each exchange."""
     ef, en, ew = (np.array(c) for c in zip(*edges))
     idx = np.arange(len(x))
-    for _ in range(iterations):
-        home_x = np.floor(x / (2.0 * widest)).astype("i8")
-        home_y = np.floor(y / (2.0 * widest)).astype("i8")
+    done, homes = 0, []
+    while done < iterations:
+        k = min(steps, iterations - done)
+        side = dorling_core.halo_reach(k, ratio, friction, widest)[0]
+        home_x = np.floor(x / side).astype("i8")
+        home_y = np.floor(y / side).astype("i8")
         gx = np.concatenate([home_x + dx for dx, _ in _OFFSETS])
         gy = np.concatenate([home_y + dy for _, dy in _OFFSETS])
         owned = np.concatenate([np.full(len(x), dx == dy == 0)
@@ -65,22 +73,25 @@ def _halo_steps(x, y, radius, perimeter, edges, widest, nbuckets,
         for b in range(nbuckets):
             sel = bucket == b
             mine = rows[sel & owned]
-            keep = np.isin(ef, mine)
+            keep = np.isin(ef, rows[sel])
             got = dorling_core.halo_step(
                 gx[sel], gy[sel], owned[sel], rows[sel], x[rows[sel]],
-                y[rows[sel]], radius[rows[sel]],
-                np.where(owned[sel], perimeter[rows[sel]], np.nan),
-                (ef[keep], en[keep], ew[keep]), RATIO, FRICTION, widest)
+                y[rows[sel]], radius[rows[sel]], perimeter[rows[sel]],
+                (ef[keep], en[keep], ew[keep]), k, ratio, friction, widest)
             nx[mine], ny[mine] = got
+        homes.append((home_x, home_y, np.floor(nx / side).astype("i8"),
+                      np.floor(ny / side).astype("i8")))
         x, y = nx, ny
-    return x, y
+        done += k
+    return x, y, homes
 
 
-def _jacobi(x, y, radius, perimeter, edges, widest, iterations):
+def _jacobi(x, y, radius, perimeter, edges, widest, iterations,
+            ratio=RATIO, friction=FRICTION):
     wmap = {(f, b): w for f, b, w in edges}
     for _ in range(iterations):
         x, y = dorling_core.jacobi_step(x, y, radius, perimeter, wmap,
-                                        RATIO, FRICTION, widest)
+                                        ratio, friction, widest)
     return x, y
 
 
@@ -89,42 +100,101 @@ def _jacobi(x, y, radius, perimeter, edges, widest, iterations):
     (5, 40, False)])
 @pytest.mark.parametrize("nbuckets", [1, 3, 7])
 def test_halo_step_matches_jacobi_step(seed, side, extras, nbuckets):
-    """4–1,600 regions, two iterations, any bucketing: the kernel equals
-    the scalar oracle to 1e-12."""
+    """4–1,600 regions, any bucketing: K kernel steps on one exchange
+    equal K iterated scalar steps bit for bit, K = 1..4, and so do five
+    iterations at two steps per exchange. On the larger maps regions
+    leave their home cell during the exchange."""
     x, y, radius, perimeter, edges = _jittered_map(seed, side, extras)
     widest = float(radius.max())
-    want = _jacobi(x, y, radius, perimeter, edges, widest, 2)
-    got = _halo_steps(x, y, radius, perimeter, edges, widest, nbuckets, 2)
-    for g, w in zip(got, want):
-        np.testing.assert_allclose(g, w, rtol=0, atol=1e-12)
+    want = [(x, y)]
+    for _ in range(5):
+        want.append(_jacobi(*want[-1], radius, perimeter, edges, widest, 1))
+    crossed = False
+    for k in range(1, 5):
+        got_x, got_y, homes = _halo_steps(x, y, radius, perimeter, edges,
+                                          widest, nbuckets, k, steps=k)
+        assert np.array_equal(got_x, want[k][0])
+        assert np.array_equal(got_y, want[k][1])
+        crossed |= any((a != c).any() or (b != d).any()
+                       for a, b, c, d in homes)
+    assert crossed or side < 20
+    got_x, got_y, _ = _halo_steps(x, y, radius, perimeter, edges, widest,
+                                  nbuckets, 5, steps=2)
+    assert np.array_equal(got_x, want[5][0])
+    assert np.array_equal(got_y, want[5][1])
 
 
-def test_halo_step_clamp_branches():
-    """Both clamps of the update: region 0 is buried in region 1 (the
-    repel force exceeds the closest distance), region 2 has three
-    disjoint non-neighbours to its right and no overlap (the attraction
-    exceeds the closest distance). Region 6 only sets widest = 2."""
+def _clamp_map():
+    """Region 0 is buried in region 1 (the repel force exceeds the
+    closest distance), region 2 has three disjoint non-neighbours to its
+    right and no overlap (the attraction exceeds the closest distance).
+    Region 6 only sets widest = 2."""
     x = np.array([0.0, 0.1, 10.0, 11.5, 11.6, 11.7, 100.0])
     y = np.array([0.0, 0.0, 0.0, 0.0, 0.0, 0.0, 0.0])
     radius = np.array([1.0, 1.0, 0.1, 0.1, 0.1, 0.1, 2.0])
     perimeter = np.full(7, 4.0)
     edges = [(0, 1, 1.0), (1, 0, 1.0)]
-    got = _halo_steps(x, y, radius, perimeter, edges, 2.0, 1, 1)
-    want = _jacobi(x, y, radius, perimeter, edges, 2.0, 1)
-    for g, w in zip(got, want):
-        np.testing.assert_allclose(g, w, rtol=0, atol=1e-12)
-    # repel clamp: |repel| = 1.9 > closest = 0.1, no attraction
-    assert got[0][0] == pytest.approx(
-        -FRICTION * (1 - RATIO) * 0.1 * 1.9 / 2.9, abs=1e-15)
-    # attract clamp: |attract| = 1.3 + 1.4 + 1.5 > closest = 1.5, pushing
-    # region 2 away from its non-neighbours
-    assert got[0][2] == pytest.approx(
-        10.0 - FRICTION * 1.5 * 4.2 / 5.2, abs=1e-12)
+    return x, y, radius, perimeter, edges
+
+
+def test_halo_step_clamp_branches():
+    """Both clamps of the update, for K = 1..4 kernel steps."""
+    x, y, radius, perimeter, edges = _clamp_map()
+    for k in range(1, 5):
+        got = _halo_steps(x, y, radius, perimeter, edges, 2.0, 1, k,
+                          steps=k)[:2]
+        want = _jacobi(x, y, radius, perimeter, edges, 2.0, k)
+        for g, w in zip(got, want):
+            assert np.array_equal(g, w)
+        if k == 1:
+            # repel clamp: |repel| = 1.9 > closest = 0.1, no attraction
+            assert got[0][0] == pytest.approx(
+                -FRICTION * (1 - RATIO) * 0.1 * 1.9 / 2.9, abs=1e-15)
+            # attract clamp: |attract| = 1.3 + 1.4 + 1.5 > closest =
+            # 1.5, pushing region 2 away from its non-neighbours
+            assert got[0][2] == pytest.approx(
+                10.0 - FRICTION * 1.5 * 4.2 / 5.2, abs=1e-12)
 
 
 def test_halo_step_without_owned_rows():
     """A bucket that holds only ghosts moves nothing."""
     got = dorling_core.halo_step(
-        [0], [0], [False], [3], [1.0], [1.0], [0.5], [np.nan],
-        ([], [], []), RATIO, FRICTION, 0.5)
+        [0], [0], [False], [3], [1.0], [1.0], [0.5], [4.0],
+        ([], [], []), 2, RATIO, FRICTION, 0.5)
     assert [len(a) for a in got] == [0, 0]
+
+
+@pytest.mark.parametrize("ratio", [0.0, 0.4, 1.0, 1.5])
+@pytest.mark.parametrize("friction", [0.2, 0.5, 1.0])
+def test_jacobi_step_moves_less_than_the_bound(ratio, friction):
+    """The bound the halo is sized by: one Jacobi step moves a region
+    by less than m = |friction|·(|1−ratio| + |ratio|)·widest, on
+    jittered lattices with an island and a coincident twin and on the
+    clamp map, over several steps."""
+    maps = [_jittered_map(seed, side) for seed, side in ((6, 3), (7, 12))]
+    maps.append(_clamp_map())
+    for x, y, radius, perimeter, edges in maps:
+        widest = float(radius.max())
+        m = abs(friction) * (abs(1 - ratio) + abs(ratio)) * widest
+        for _ in range(4):
+            nx, ny = _jacobi(x, y, radius, perimeter, edges, widest, 1,
+                             ratio, friction)
+            assert np.hypot(nx - x, ny - y).max() < m
+            x, y = nx, ny
+
+
+def test_halo_reach_is_the_dependency_radius():
+    """Cell sides follow R_1 = 2·widest, R_K = R_(K−1) + 2·widest +
+    2(K−1)·m; with the defaults (m = widest / 2) R_2 = 5·widest."""
+    widest = 1.5
+    m = FRICTION * widest
+    r = 2.0 * widest
+    for k in range(1, 9):
+        if k > 1:
+            r += 2.0 * widest + 2.0 * (k - 1) * m
+        reach = dorling_core.halo_reach(k, RATIO, FRICTION, widest)
+        assert len(reach) == k + 1 and reach[-1] == 0.0
+        assert reach[0] == pytest.approx(r, rel=1e-8) and reach[0] >= r
+        assert (np.diff(reach) < 0).all()
+    assert dorling_core.halo_reach(2, RATIO, FRICTION, widest)[0] \
+        == pytest.approx(5.0 * widest, rel=1e-8)

@@ -1,5 +1,6 @@
 """Scalable-mode Dorling at a few hundred regions: invariants + exact
-match against the local Jacobi oracle (SURVEY.md §4.3.2 mode='scalable')."""
+match against the local Jacobi oracle (SURVEY.md §4.3.2 mode='scalable'),
+the halo exchange's coverage and the Spark jobs per call."""
 
 import math
 
@@ -55,29 +56,32 @@ def _local(grid_rows):
 
 
 def test_scalable_matches_jacobi_oracle_at_scale(spark, grid_df):
+    """Iterations 1–5 (one and two halo exchanges) equal iterated
+    ``jacobi_step`` bit for bit, started from the call's own centroids
+    and radii; the radii match an independent calibration."""
     grid_rows = sorted(grid_df.collect(), key=lambda r: r["region_idx"])
     cents, values, perims, edges, radii = _local(grid_rows)
-    x = np.array([c[0] for c in cents])
-    y = np.array([c[1] for c in cents])
     wmap = {(i, j): w for i, j, w in edges}
-    widest = radii.max()
-    iters = 3
-    for _ in range(iters):
-        x, y = dorling_core.jacobi_step(x, y, radii, perims, wmap,
-                                        ratio=0.4, friction=0.5, widest=widest)
-
     cart = Cartogram(grid_df, "value", "name", idx_field="region_idx")
-    out = {r["region_idx"]: r
-           for r in cart.dorling(iterations=iters, mode="scalable").collect()}
-    assert len(out) == N_SIDE * N_SIDE
-    ex = np.array([out[i]["cx"] for i in range(len(x))])
-    ey = np.array([out[i]["cy"] for i in range(len(y))])
-    np.testing.assert_allclose(ex, x, atol=1e-8)
-    np.testing.assert_allclose(ey, y, atol=1e-8)
-    # invariants: radii preserved exactly, no NaNs, bounded displacement
-    for i in range(len(x)):
-        assert out[i]["radius"] == pytest.approx(radii[i], rel=1e-9)
-        assert abs(out[i]["cx"] - cents[i][0]) < iters * widest
+
+    def run(iters):
+        out = sorted(cart.dorling(iterations=iters, mode="scalable")
+                     .select("region_idx", "cx", "cy", "radius").collect())
+        assert [r[0] for r in out] == list(range(N_SIDE * N_SIDE))
+        return tuple(np.array([r[c] for r in out]) for c in (1, 2, 3))
+
+    x, y, radius = run(0)
+    np.testing.assert_allclose(x, [c[0] for c in cents], atol=1e-12)
+    np.testing.assert_allclose(y, [c[1] for c in cents], atol=1e-12)
+    np.testing.assert_allclose(radius, radii, rtol=1e-9)
+    widest = radius.max()
+    for iters in range(1, 6):
+        x, y = dorling_core.jacobi_step(x, y, radius, perims, wmap,
+                                        ratio=0.4, friction=0.5,
+                                        widest=widest)
+        got = run(iters)
+        assert np.array_equal(got[0], x) and np.array_equal(got[1], y)
+        assert np.array_equal(got[2], radius)
 
 
 def test_scalable_dorling_is_partition_independent(spark):
@@ -118,83 +122,81 @@ def test_scalable_dorling_is_partition_independent(spark):
 
 
 def test_halo_holds_every_interacting_pair(spark):
-    """Property of the exchange: for every pair with dist < widest + r_i
-    the neighbour has a row in the focal's home cell, and so in its
-    bucket; every region is owned exactly once. Points sit on cell
-    boundaries and at negative coordinates too."""
+    """Property of the exchange for K = 1, 2 and 4 Jacobi steps: every
+    region within the K-step dependency radius R_K of a focal (R_1 =
+    2·widest, R_K = R_(K−1) + 2·widest + 2(K−1)·m, m the per-step
+    movement bound) has a row in the focal's home cell, and so in its
+    bucket; every region is owned exactly once; ghosts carry the
+    perimeter and weights they are stepped with, but no id or value.
+    Points sit on cell boundaries and at negative coordinates too."""
+    for steps in (1, 2, 4):
+        _check_halo(spark, steps)
+
+
+def _check_halo(spark, steps):
     from ecmm428_pycart_spark.plans.cartogram import _halo
 
-    rng = np.random.default_rng(5)
+    rng = np.random.default_rng(5 + steps)
     n = 400
     radius = rng.uniform(0.05, 0.5, n)
     widest = float(radius.max())
-    size = 2.0 * widest
-    x = rng.uniform(-6.0, 6.0, n)
-    y = rng.uniform(-6.0, 6.0, n)
+    reach = 2.0 * widest
+    for k in range(2, steps + 1):
+        reach += 2.0 * widest + 2.0 * (k - 1) * 0.5 * widest
+    size = dorling_core.halo_reach(steps, 0.4, 0.5, widest)[0]
+    span = 3.0 * size
+    x = rng.uniform(-span, span, n)
+    y = rng.uniform(-span, span, n)
     x[:40] = np.round(x[:40] / size) * size        # on a cell edge
     y[20:60] = np.round(y[20:60] / size) * size
     cur = spark.createDataFrame(
-        [(i, float(x[i]), float(y[i]), float(radius[i]), 4.0)
-         for i in range(n)],
-        "region_idx long, cx double, cy double, radius double, "
-        "perimeter double")
+        [(i, f"r{i}", 1.0, float(x[i]), float(y[i]), float(radius[i]),
+          4.0, [i + 1], [0.5]) for i in range(n)],
+        "region_idx long, _id string, _value double, cx double, "
+        "cy double, radius double, perimeter double, _nb array<bigint>, "
+        "_wt array<double>")
     rows = cur.select(_halo(cur.schema, size, 7)).select(
-        "region_idx", "gx", "gy", "owned", "_bucket", "perimeter").collect()
+        "region_idx", "gx", "gy", "owned", "_bucket", "_id", "_value",
+        "perimeter", "_nb").collect()
     home = {r["region_idx"]: (r["gx"], r["gy"], r["_bucket"])
             for r in rows if r["owned"]}
     assert len(home) == n and sum(r["owned"] for r in rows) == n
-    assert all(r["perimeter"] is None for r in rows if not r["owned"])
+    assert all(r["_id"] is None and r["_value"] is None
+               and r["perimeter"] == 4.0 and r["_nb"] == [r["region_idx"] + 1]
+               for r in rows if not r["owned"])
     where = {(r["region_idx"], r["gx"], r["gy"]): r["_bucket"] for r in rows}
     d = np.hypot(x[:, None] - x[None, :], y[:, None] - y[None, :])
-    pairs = np.argwhere((d > 0) & (d < widest + radius[:, None]))
+    pairs = np.argwhere((d > 0) & (d < reach))
     assert len(pairs) > n
     for f, nb in pairs:
         gx, gy, bucket = home[f]
         assert where.get((nb, gx, gy)) == bucket, (f, nb)
 
 
-def test_dorling_lazy_checkpoints_match_eager_and_run_fewer_jobs(
-        spark, grid_df, monkeypatch):
-    """r14 "fewer jobs" lever (plans/cartogram._ckpt): lazy
-    localCheckpoints compile the identical physical plans (same
-    truncation, same partitioning) but defer materialization to the
-    terminal action, collapsing the per-stage checkpoint jobs into
-    one. Output must match the eager path to the last ULP (approx at
-    1e-12: the calibration's float sums are fetch-order sensitive;
-    radii exact), and the lazy path must demonstrably run FEWER Spark
-    jobs."""
-    from ecmm428_pycart_spark.plans.cartogram import Cartogram
+def test_scalable_dorling_jobs_per_call(spark, grid_df):
+    """Absolute pin on the Spark jobs of one scalable call plus its
+    collect at 2 and 3 iterations, read through a job group: the
+    set-up's jobs (regions checkpoint, the calibration collect with its
+    adaptive stages, weights attach), one halo exchange of up to
+    ``K_MAX`` Jacobi steps, and the collect; nothing is joined back.
+    Measured 13–15: the adaptive jobs of the set-up vary by one or two
+    from run to run, so the pin leaves one job of room. One exchange
+    per iteration with a join-back after the loop ran 18–19."""
+    from ecmm428_pycart_spark.plans.cartogram import K_MAX
 
-    def run(tag, eager_off):
-        if eager_off:
-            monkeypatch.setenv("SPARK_GRAFT_DORLING_LAZYCKPT_OFF", "1")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_DORLING_LAZYCKPT_OFF",
-                               raising=False)
-        sc = spark.sparkContext
+    sc = spark.sparkContext
+
+    def jobs(iterations):
+        tag = f"dorling-jobs-{iterations}"
         sc.setJobGroup(tag, tag)
         try:
-            cart = Cartogram(grid_df, "value", "name",
-                             idx_field="region_idx")
-            rows = (cart.dorling(iterations=3, mode="scalable")
-                    .select("name", "cx", "cy", "radius").collect())
+            Cartogram(grid_df, "value", "name", idx_field="region_idx") \
+                .dorling(iterations=iterations, mode="scalable") \
+                .select("name", "cx", "cy", "radius").collect()
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
-        jobs = sc.statusTracker().getJobIdsForGroup(tag)
-        return (sorted((r["name"], r["cx"], r["cy"], r["radius"])
-                       for r in rows), len(jobs))
+        return len(sc.statusTracker().getJobIdsForGroup(tag))
 
-    lazy_rows, lazy_jobs = run("dorling-arm-lazy", eager_off=False)
-    eager_rows, eager_jobs = run("dorling-arm-eager", eager_off=True)
-    assert [r[0] for r in lazy_rows] == [r[0] for r in eager_rows]
-    for (_, lx, ly, lr), (_, ex, ey, er) in zip(lazy_rows, eager_rows):
-        assert lx == pytest.approx(ex, rel=1e-12, abs=1e-12)
-        assert ly == pytest.approx(ey, rel=1e-12, abs=1e-12)
-        assert lr == er
-    # eager runs one blocking job per checkpoint (base, borders, the
-    # weighted state, one per iteration) ON TOP of the jobs both arms
-    # share (the regions checkpoint, the setup collect, one map stage
-    # per exchange, the terminal action) — so the pin is strictly-fewer,
-    # not an absolute count.
-    assert lazy_jobs < eager_jobs, (
-        f"lazy dorling must run fewer jobs ({lazy_jobs} vs {eager_jobs})")
+    assert K_MAX >= 3
+    for iterations in (2, 3):
+        assert jobs(iterations) <= 16, iterations
