@@ -1441,6 +1441,12 @@ def _decode_jpeg_gray_inner(data: bytes) -> np.ndarray:
         raise ValueError("no SOF0 before SOS")
     bw_blocks = (width + 7) // 8
     bh_blocks = (height + 7) // 8
+    # every huffman symbol is >= 1 bit and a block is >= 2 symbols (DC,
+    # then EOB or an AC code), so the scan's bytes bound the block count
+    scan_bytes = max(len(data) - pos, 0)
+    if bh_blocks * bw_blocks > 4 * scan_bytes:
+        raise ValueError(f"JPEG SOF {width}x{height} exceeds what its "
+                         f"{scan_bytes}-byte scan can encode")
     q = qt[comp_q]
     dct, act = huff[(0, comp_dc)], huff[(1, comp_ac)]
     br = _BitReader(data, pos)
@@ -1721,6 +1727,11 @@ def _decode_jpeg_color_inner(data: bytes):
         raise ValueError("only 3-component 4:2:0 supported")
     if height % 16 or width % 16:
         raise ValueError("dimensions must be multiples of 16")
+    # an MCU is 6 blocks of >= 2 huffman symbols of >= 1 bit each
+    scan_bytes = max(len(data) - pos, 0)
+    if 12 * (height // 16) * (width // 16) > 8 * scan_bytes:
+        raise ValueError(f"JPEG SOF {width}x{height} exceeds what its "
+                         f"{scan_bytes}-byte scan can encode")
 
     inv_zz = np.empty(64, dtype=np.int64)
     inv_zz[_ZIGZAG] = np.arange(64)

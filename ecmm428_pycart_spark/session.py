@@ -31,6 +31,8 @@ def get_spark(app_name: str = "ecmm428_pycart_spark",
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        # workers skip re-reading unchanged zip archives on every task
+        .config("spark.python.daemon.module", "ecmm428_pycart_spark.pydaemon")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

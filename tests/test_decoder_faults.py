@@ -230,6 +230,14 @@ def test_bit_flip_corruption_is_decoded_or_diagnostic():
          M.decode_png_pixels),
         (M.encode_jpeg_gray(jarr), M.decode_jpeg_gray),
         (M.encode_jpeg_color(y, cb, cr), M.decode_jpeg_color),
+        # minimal scans, where the JPEG payload bound is closest
+        (M.encode_jpeg_gray(np.full((16, 16), 128, np.uint8)),
+         M.decode_jpeg_gray),
+        (M.encode_jpeg_color(*(np.full(s, 128, np.uint8)
+                               for s in ((16, 16), (8, 8), (8, 8)))),
+         M.decode_jpeg_color),
+        (M.avi_bytes_mjpeg([M.encode_jpeg_gray(jarr)], 16, 8),
+         M.decode_avi_mjpeg_frames),
         (M.lz4_compress_block(b"abcabcabcabc1234" * 8),
          M.lz4_decompress_block),
         (zlib.compress(b"the quick brown fox " * 10)[2:-4], M.inflate),
@@ -337,6 +345,75 @@ def test_tga_payload_bound_admits_128_pixels_per_packet():
     assert len(t) == 18 + 3 * 2 * 4
     px, n_rle, n_raw = M.decode_tga_pixels(t)
     assert np.array_equal(px, arr) and (n_rle, n_raw) == (6, 0)
+
+
+def _sof_resized(b, height, width):
+    """The JPEG ``b`` with its SOF0 height and width replaced."""
+    import struct
+
+    b = bytearray(b)
+    at = b.index(b"\xFF\xC0") + 5
+    b[at:at + 4] = struct.pack(">HH", height, width)
+    return bytes(b)
+
+
+def _raises_within(dec, b, match, peak_mib=4):
+    """``dec(b)`` raises ValueError matching ``match`` fast and with a
+    ``tracemalloc`` peak under ``peak_mib`` MiB."""
+    import time
+    import tracemalloc
+
+    tracemalloc.start()
+    t0 = time.time()
+    try:
+        with pytest.raises(ValueError, match=match):
+            dec(b)
+        peak = tracemalloc.get_traced_memory()[1]
+    finally:
+        tracemalloc.stop()
+    assert time.time() - t0 < 0.1
+    assert peak < peak_mib * 2 ** 20
+
+
+def test_jpeg_gray_header_beyond_payload_raises_fast():
+    """A ~340-byte gray JPEG whose SOF says 65535x65535 sized a 4 GiB
+    buffer before it read the scan. Every huffman symbol is >= 1 bit
+    and a block is >= 2 symbols, so the header is refused against the
+    scan's bytes first."""
+    jarr = ((np.arange(64).reshape(8, 8) * 3) % 251).astype(np.uint8)
+    b = _sof_resized(M.encode_jpeg_gray(jarr), 65535, 65535)
+    _raises_within(M.decode_jpeg_gray, b, "JPEG SOF 65535x65535")
+
+
+def test_jpeg_color_header_beyond_payload_raises_fast():
+    """The 4:2:0 decoder sized its three planes from SOF the same way;
+    an MCU is 6 blocks, so >= 12 bits of scan."""
+    y = ((np.arange(256).reshape(16, 16) * 3) % 251).astype(np.uint8)
+    c = np.full((8, 8), 128, np.uint8)
+    b = _sof_resized(M.encode_jpeg_color(y, c, c), 65520, 65520)
+    _raises_within(M.decode_jpeg_color, b, "JPEG SOF 65520x65520")
+
+
+def test_avi_mjpeg_frame_header_beyond_payload_raises_fast():
+    """MJPEG frames decode through decode_jpeg_gray and inherit its
+    bound."""
+    jarr = ((np.arange(64).reshape(8, 8) * 3) % 251).astype(np.uint8)
+    frame = _sof_resized(M.encode_jpeg_gray(jarr), 65535, 65535)
+    _raises_within(M.decode_avi_mjpeg_frames,
+                   M.avi_bytes_mjpeg([frame], 8, 8), "JPEG SOF")
+
+
+def test_jpeg_payload_bound_admits_minimal_scans():
+    """The bounds admit the most compressed legal scans: a flat image
+    is one DC-category-0 code and one EOB per block (6 bits with the
+    standard luminance tables), and decodes exactly."""
+    flat = np.full((256, 256), 128, np.uint8)
+    g = M.encode_jpeg_gray(flat)
+    assert len(g) < 1024 * 2                     # ~6 bits per block
+    assert np.array_equal(M.decode_jpeg_gray(g), flat)
+    c = np.full((128, 128), 128, np.uint8)
+    planes = M.decode_jpeg_color(M.encode_jpeg_color(flat, c, c))
+    assert all(np.array_equal(p, e) for p, e in zip(planes, (flat, c, c)))
 
 
 def test_gzip_and_protobuf_truncation_contracts():
