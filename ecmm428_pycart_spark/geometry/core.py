@@ -342,45 +342,118 @@ def shared_boundary_length(ga, gb, rel_tol: float = 1e-9) -> float:
     of two such polygons is the set of collinear overlapping boundary
     segments. Point contacts contribute 0 length, matching the reference's
     zero weight for corner-only (diagonal) neighbours.
+
+    One pair of ``shared_boundary_lengths``.
     """
-    sa = _segments(ga)
-    sb = _segments(gb)
-    # scale-relative tolerance for collinearity tests
-    span = max(
-        np.abs(sa).max(initial=0.0), np.abs(sb).max(initial=0.0), 1.0
-    )
-    tol = rel_tol * span
-    # bbox prefilter for b segments
-    bminx = np.minimum(sb[:, 0], sb[:, 2]) - tol
-    bmaxx = np.maximum(sb[:, 0], sb[:, 2]) + tol
-    bminy = np.minimum(sb[:, 1], sb[:, 3]) - tol
-    bmaxy = np.maximum(sb[:, 1], sb[:, 3]) + tol
-    total = 0.0
-    for x1, y1, x2, y2 in sa:
-        dx, dy = x2 - x1, y2 - y1
-        seg_len = math.hypot(dx, dy)
-        if seg_len < tol:
-            continue
-        lo_x, hi_x = min(x1, x2) - tol, max(x1, x2) + tol
-        lo_y, hi_y = min(y1, y2) - tol, max(y1, y2) + tol
-        cand = ~((bmaxx < lo_x) | (bminx > hi_x) | (bmaxy < lo_y) | (bminy > hi_y))
-        if not cand.any():
-            continue
-        c = sb[cand]
-        # collinear: both endpoints of b-seg on the a-seg line
-        cross1 = dx * (c[:, 1] - y1) - dy * (c[:, 0] - x1)
-        cross2 = dx * (c[:, 3] - y1) - dy * (c[:, 2] - x1)
-        col = (np.abs(cross1) <= tol * seg_len) & (np.abs(cross2) <= tol * seg_len)
-        if not col.any():
-            continue
-        c = c[col]
-        # param of b endpoints along a-seg
-        t1 = ((c[:, 0] - x1) * dx + (c[:, 1] - y1) * dy) / (seg_len * seg_len)
-        t2 = ((c[:, 2] - x1) * dx + (c[:, 3] - y1) * dy) / (seg_len * seg_len)
-        tlo = np.clip(np.minimum(t1, t2), 0.0, 1.0)
-        thi = np.clip(np.maximum(t1, t2), 0.0, 1.0)
-        total += float(np.sum(np.maximum(0.0, thi - tlo))) * seg_len
-    return total
+    return float(shared_boundary_lengths([(ga, gb)], rel_tol)[0])
+
+
+# (pair, a-segment, b-segment) triples one pass of shared_boundary_lengths
+# compares, plus at most one a-segment's worth: bounds its working memory
+# whatever the polygon sizes.
+_CHUNK_TRIPLES = 1 << 16
+
+
+def _segment_table(geom):
+    """``_segments(geom)``, their ``math.hypot`` lengths and the largest
+    absolute coordinate."""
+    segs = _segments(geom)
+    lens = np.array([math.hypot(dx, dy) for dx, dy in
+                     (segs[:, 2:] - segs[:, :2]).tolist()], dtype="f8")
+    return segs, lens, np.abs(segs).max(initial=0.0)
+
+
+def shared_boundary_lengths(pairs, rel_tol: float = 1e-9) -> np.ndarray:
+    """``shared_boundary_length(ga, gb)`` of every ``(ga, gb)`` in
+    ``pairs``, as one float64 array in pair order.
+
+    Each segment of ``ga`` (an a-row) is tested against every segment of
+    ``gb``: a b-segment counts if it meets the a-segment's bounding box
+    widened by ``tol`` and both its endpoints lie within ``tol`` of the
+    a-segment's line, where ``tol = rel_tol * max(|coordinate|, 1)`` over
+    the pair. The a-segment adds the clipped overlap of those b-segments
+    times its length. The (pair, a-segment, b-segment) triples run in
+    chunks of whole a-rows, about ``_CHUNK_TRIPLES`` triples each, so
+    memory does not grow with the largest polygon squared.
+
+    Each pair gives the same double as a per-segment loop would: segment
+    lengths are ``math.hypot``, an a-row's overlaps are added with
+    ``np.sum`` in b-segment order, and a pair's a-rows in ring order.
+    Geometries are keyed by object identity, so a geometry repeated over
+    pairs is split into segments once.
+    """
+    pairs = list(pairs)
+    slot: dict[int, int] = {}
+    tables = []
+    for g in (g for p in pairs for g in p):
+        if slot.setdefault(id(g), len(tables)) == len(tables):
+            tables.append(_segment_table(g))
+    if not tables:
+        return np.zeros(0)
+    ia, ib = np.array([[slot[id(a)], slot[id(b)]] for a, b in pairs],
+                      dtype="i8").T
+    segs = np.concatenate([t[0] for t in tables])
+    lens = np.concatenate([t[1] for t in tables])
+    nseg = np.array([len(t[1]) for t in tables], dtype="i8")
+    first = np.cumsum(nseg) - nseg
+    absmax = np.array([t[2] for t in tables])
+    tol = rel_tol * np.maximum(np.maximum(absmax[ia], absmax[ib]), 1.0)
+    lo = np.minimum(segs[:, :2], segs[:, 2:])
+    hi = np.maximum(segs[:, :2], segs[:, 2:])
+
+    # a-rows in (pair, ring) order; segments shorter than tol add nothing
+    na = nseg[ia]
+    row_pair = np.repeat(np.arange(len(pairs)), na)
+    row_seg = np.arange(na.sum()) + np.repeat(first[ia] - np.cumsum(na) + na,
+                                              na)
+    keep = lens[row_seg] >= tol[row_pair]
+    row_pair, row_seg = row_pair[keep], row_seg[keep]
+    rtol = tol[row_pair]
+    cost = nseg[ib][row_pair]
+    start = np.cumsum(cost) - cost
+    cuts = np.flatnonzero(np.diff(start // _CHUNK_TRIPLES)) + 1
+    hit_pair, terms = [np.zeros(0, "i8")], [np.zeros(0)]
+    for r0, r1 in zip([0, *cuts], [*cuts, len(cost)]):
+        rp, rs, rt = row_pair[r0:r1], row_seg[r0:r1], rtol[r0:r1]
+        row = np.repeat(np.arange(r1 - r0), cost[r0:r1])  # a triple's a-row
+        b = np.arange(len(row)) + np.repeat(
+            first[ib[rp]] - start[r0:r1] + start[r0], cost[r0:r1])
+        tt = rt[row]
+        cand = ~((hi[b, 0] + tt < (lo[rs, 0] - rt)[row])
+                 | (lo[b, 0] - tt > (hi[rs, 0] + rt)[row])
+                 | (hi[b, 1] + tt < (lo[rs, 1] - rt)[row])
+                 | (lo[b, 1] - tt > (hi[rs, 1] + rt)[row]))
+        k = np.flatnonzero(cand)
+        row, c = row[k], segs[b[k]]
+        x1, y1, x2, y2 = segs[rs].T
+        dx, dy, sl = x2 - x1, y2 - y1, lens[rs]
+        # collinear: both endpoints of the b-segment on the a-segment line
+        ax, ay, adx, ady = x1[row], y1[row], dx[row], dy[row]
+        lim = (rt * sl)[row]
+        col = ((np.abs(adx * (c[:, 1] - ay) - ady * (c[:, 0] - ax)) <= lim)
+               & (np.abs(adx * (c[:, 3] - ay) - ady * (c[:, 2] - ax)) <= lim))
+        k = np.flatnonzero(col)
+        row, c, ax, ay, adx, ady = row[k], c[k], ax[k], ay[k], adx[k], ady[k]
+        # b endpoints as parameters along the a-segment, overlap clipped
+        l2 = (sl * sl)[row]
+        t1 = ((c[:, 0] - ax) * adx + (c[:, 1] - ay) * ady) / l2
+        t2 = ((c[:, 2] - ax) * adx + (c[:, 3] - ay) * ady) / l2
+        v = np.maximum(0.0, np.clip(np.maximum(t1, t2), 0.0, 1.0)
+                       - np.clip(np.minimum(t1, t2), 0.0, 1.0))
+        # an a-row's sum: sequential for <= 2 overlaps; np.sum's own
+        # grouping, over the row's overlaps alone, for more
+        n = np.bincount(row, minlength=r1 - r0)
+        rsum = np.bincount(row, weights=v, minlength=r1 - r0)
+        at = np.cumsum(n) - n
+        for r in np.flatnonzero(n > 2):
+            rsum[r] = np.sum(v[at[r]:at[r] + n[r]])
+        h = np.flatnonzero(n)
+        hit_pair.append(rp[h])
+        terms.append(rsum[h] * sl[h])
+    # pair totals: the a-rows' terms added in ring order (bincount adds
+    # sequentially in index order)
+    return np.bincount(np.concatenate(hit_pair),
+                       weights=np.concatenate(terms), minlength=len(pairs))
 
 
 def point_distance(ax: float, ay: float, bx: float, by: float) -> float:

@@ -104,10 +104,10 @@ def queen_borders(geoms):
     Two regions are Queen neighbours iff they share a vertex after
     rounding to ``_VERTEX_DECIMALS`` (numpy's half-even rounding; it can
     group differently from Spark's half-up ``round`` only for distinct
-    vertices less than 1e-9 apart). The weight is
-    ``core.shared_boundary_length`` of the lower-index geometry against
-    the higher, mirrored — the argument order get_borders uses, so the
-    weights are the same doubles."""
+    vertices less than 1e-9 apart). The weight is the shared boundary
+    length of the lower-index geometry against the higher, mirrored — the
+    argument order get_borders uses, so the weights are the same doubles.
+    All pairs go through one ``core.shared_boundary_lengths`` call."""
     owners: dict[tuple, set] = {}
     for r, g in enumerate(geoms):
         for v in map(tuple, np.round(core.vertices(g), _VERTEX_DECIMALS)
@@ -115,8 +115,8 @@ def queen_borders(geoms):
             owners.setdefault(v, set()).add(r)
     und = {(i, j) for rs in owners.values() for i in rs for j in rs if i < j}
     a, b = np.array(list(und), dtype="i8").reshape(-1, 2).T
-    w = np.array([core.shared_boundary_length(geoms[i], geoms[j])
-                  for i, j in zip(a, b)], dtype="f8")
+    w = core.shared_boundary_lengths(
+        [(geoms[i], geoms[j]) for i, j in zip(a.tolist(), b.tolist())])
     focal = np.concatenate([a, b])
     neighbor = np.concatenate([b, a])
     weight = np.concatenate([w, w])

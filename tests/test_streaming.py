@@ -307,11 +307,10 @@ def test_foreach_batch_upsert_idempotent_retry(spark, tmp_path):
                      ("2024-01-02", "click"): (2, 2.0)}
 
 
-def test_funnel_stream_matches_batch(spark):
+def test_funnel_stream_matches_batch(spark, tmp_path):
     """Streaming funnel over a 3-slice time-ordered replay must land on
     exactly the batch funnel's step counts (cross-batch state: users'
     funnels span slices)."""
-    import tempfile
     import uuid
 
     from pyspark.sql import Window as W
@@ -327,7 +326,7 @@ def test_funnel_stream_matches_batch(spark):
         .localCheckpoint(eager=True)
     slices = [ranked.filter(F.col("_b") == i).drop("_b")
               for i in range(1, 4)]
-    d = tempfile.mkdtemp(prefix="funnel_stream_")
+    d = str(tmp_path)
     se.write_time_ordered_stream_dir(slices, d)
 
     stream = (se.read_events_stream(spark, d, max_files_per_trigger=1)
@@ -337,7 +336,10 @@ def test_funnel_stream_matches_batch(spark):
     q = (se.funnel_stream(stream, steps).writeStream
          .format("memory").queryName(name)
          .outputMode("update").trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
 
     depth = (spark.table(name).groupBy("user_id")
              .agg(F.max("depth").alias("depth")))
