@@ -13,9 +13,9 @@ from pyspark.sql import functions as F
 
 from ecmm428_pycart_spark.datapipe import (band_store, dedup, multimodal,
                                            similarity, text)
+from ecmm428_pycart_spark.session import checkpoint
 from ecmm428_pycart_spark.session import load_table as _t
 from ecmm428_pycart_spark.session import spread_small as _spread
-from ecmm428_pycart_spark.session import lazy_ckpt as _lazy_ckpt
 
 QUERIES = {}
 ORACLES = {}
@@ -758,7 +758,7 @@ def m12_resize_pixels(spark, sf_dir):
     # r14 (VERDICT r13 next-1): spread capped at 8 tasks. The driver's
     # r13 record showed 30.2s@32c — 32 concurrent Arrow workers over
     # 156 rows each amplify the host's bad many-thread regime — while
-    # the interleaved 4-arm A/B (tools/ab_m12_r14.py, both core
+    # the interleaved 4-arm A/B (OPTIMIZATION_r14.md, both core
     # counts) measured cap-8 == full spread (1.3s vs 1.2s @32c,
     # 1.27s vs 1.30s @8c, outputs checksum-identical) at 4x less
     # regime exposure. 8 tasks = 625 docs/task, >100 ms kernel work
@@ -1525,7 +1525,7 @@ def d19_corpus_clean(spark, sf_dir):
     # and the dedup window don't re-execute per consumer. Lazy since
     # r14: connected_components' gate count is an interleaved action
     # that materializes it before the fan-out consumers run.
-    exact = _lazy_ckpt(exact)
+    exact = checkpoint(exact)
     # stage 4: near-dup removal over the survivors only — the band
     # index comes from the store, semi-joined down to the survivors
     # (band keys are per-doc pure; the bucket cap re-applies to the

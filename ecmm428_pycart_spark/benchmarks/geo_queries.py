@@ -17,13 +17,12 @@ tools/gen_goldens.py), so they are hash-checked like everything else.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from ecmm428_pycart_spark.datapipe.graph import _ckpt as _gckpt  # r14 lazy-ckpt (SPARK_GRAFT_GRAPH_LAZYCKPT_OFF)
 
 from ecmm428_pycart_spark.geometry.udfs import st_wkt_to_wkb
 from ecmm428_pycart_spark.operators.borders import get_borders
 from ecmm428_pycart_spark.plans.cartogram import Cartogram
+from ecmm428_pycart_spark.session import checkpoint
 from ecmm428_pycart_spark.session import load_table as _t
-from ecmm428_pycart_spark.session import lazy_ckpt as _lazy_ckpt
 
 QUERIES = {}
 ORACLES = {}
@@ -427,7 +426,7 @@ def q41_e3_pipeline(spark, sf_dir):
               # since r14: the dorling setup's calibration collect is
               # an interleaved action that materializes it before the
               # final projection runs.
-              .transform(_lazy_ckpt))
+              .transform(checkpoint))
     cart = Cartogram(mapped, "value", "n_name", idx_field="region_idx")
     radii = cart.dorling_radii().select(
         F.col("id").alias("n_name"), F.round("radius", 6).alias("radius"))
@@ -522,14 +521,14 @@ def g10_pagerank_borders(spark, sf_dir):
 
     borders = customer_borders(spark, sf_dir)
     edges = (borders.select("focal", "neighbor")
-             .transform(_gckpt))
+             .transform(checkpoint))
     deg = edges.groupBy("focal").agg(F.count(F.lit(1)).alias("d"))
     nodes = customer_nodes(spark, sf_dir).select(
         F.col("region_idx").alias("k"))
     n_df = nodes.agg(F.count(F.lit(1)).alias("cnt"))
     ranks = (nodes.crossJoin(F.broadcast(n_df))
              .select("k", (F.lit(1.0) / F.col("cnt")).alias("r"))
-             .transform(_gckpt))
+             .transform(checkpoint))
     ed = edges.join(deg, "focal")
     for _ in range(3):
         contrib = (ed.join(ranks, ed["focal"] == ranks["k"])
@@ -542,7 +541,7 @@ def g10_pagerank_borders(spark, sf_dir):
                          (F.lit(0.15) / F.col("cnt")
                           + F.lit(0.85) * F.coalesce(F.col("c"), F.lit(0.0))
                           ).alias("r"))
-                 .transform(_gckpt))
+                 .transform(checkpoint))
     return ranks.select(F.col("k").alias("region_idx"),
                         F.round(F.col("r") * 1000000, 4).alias("rank_ppm"))
 

@@ -4,8 +4,8 @@ whole 50-slot window). Same contract as round 4's queue
 (benchmarks/queued.py, registered round 5): every entry carries its
 DuckDB oracle beside it, tests/test_queued6_queries.py replays the
 driver-gate compare on each at the chosen SPARK_GRAFT_TESTDATA scale,
-and registration is mechanical once round 6's rotation
-(tools/apply_round6.py) empties the deferred list.
+and registration is mechanical once round 6's rotation empties the
+deferred list.
 
 Entries here must obey the same gate rules as registered queries:
 scalar output columns only (the driver canonicalizer crashes on

@@ -12,8 +12,8 @@ first for anything urgent.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from ecmm428_pycart_spark.datapipe.graph import _ckpt as _gckpt  # r14 lazy-ckpt (SPARK_GRAFT_GRAPH_LAZYCKPT_OFF)
 
+from ecmm428_pycart_spark.session import checkpoint
 from ecmm428_pycart_spark.session import load_table as _t
 
 QUERIES = {}
@@ -3151,14 +3151,14 @@ def g41_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
          .groupBy(F.col("src_host").alias("s"),
                   F.col("dst_host").alias("t"))
          .agg(F.count(F.lit(1)).alias("w"))
-         .transform(_gckpt))
+         .transform(checkpoint))
     ow = e.groupBy("s").agg(F.sum("w").alias("ow"))
     nodes = (e.select(F.col("s").alias("h"))
              .union(e.select("t")).distinct())
     n_df = nodes.agg(F.count(F.lit(1)).alias("cnt"))
     ranks = (nodes.crossJoin(F.broadcast(n_df))
              .select("h", F.expr("1000000000000 div cnt").alias("r"))
-             .transform(_gckpt))
+             .transform(checkpoint))
     ed = e.join(ow, "s")
     for _ in range(3):
         # exact floor(r*w/ow) with BOUNDED int64 intermediates: with
@@ -3180,7 +3180,7 @@ def g41_host_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
                          (F.expr("15 * 1000000000000 div (100 * cnt)")
                           + F.expr("85 * coalesce(c, 0L) div 100"))
                          .alias("r"))
-                 .transform(_gckpt))
+                 .transform(checkpoint))
     inw = (e.groupBy(F.col("t").alias("h"))
            .agg(F.sum("w").alias("in_links")))
     return (ranks

@@ -31,7 +31,7 @@ DRIVER_WINDOW = [
     # ROUND-14 ROTATION (evidence freshness): the 48 queries
     # with the OLDEST committed PASSING driver-gate rows,
     # re-gated on the current tree + two sentinels.
-    # Computed by tools/apply_round14.py from CORRECTNESS_r*.
+    # Computed by tools/rotate_gate.py from CORRECTNESS_r*.
     "q01_pricing_summary",
     "g04_dorling_positions",
     "g18_clustering_coeff",
@@ -84,23 +84,13 @@ DRIVER_WINDOW = [
     "d64_pii_scrub",
 ]
 
-# Queries registered this round that did NOT fit the round-5 window;
-# they MUST form (with the q01/g04 sentinels) round 6's window —
-# exactly 48 + 2 = 50.
-#
-# ROUND-6 RECIPE: run `python tools/apply_round6.py` (validated in
-# round 5 on the live tree: rotation + sentinel swap + gate tests
-# green, then reverted). It sets
-#   DRIVER_WINDOW = [q01, g04, *DEFERRED_TO_NEXT_ROUND]  # exactly 50
-#   DEFERRED_TO_NEXT_ROUND = []                          # fresh list
-# and SENTINELS <- {q01, g04} in tests/test_gate_coverage.py. New
-# round-6 gate queries then register directly and append here while
-# the 50 - |sentinels| budget lasts. GATE OUTPUTS MUST BE SCALAR —
-# test_window_outputs_are_scalar_typed DESCRIBEs window + deferred.
-# All entries below are verify_oracle-green at sf0.001/0.01/0.1 and
-# local[7] (docs/ORACLE_FULL_r5.md); tests/test_gate_coverage.py
-# fails if any registered query is neither historically checked, in
-# the current window, nor in this list.
+# Queries registered but not yet in the window; with the sentinels
+# they must fit the next window (50 - len(NEXT_ROUND_SENTINELS)).
+# GATE OUTPUTS MUST BE SCALAR — test_window_outputs_are_scalar_typed
+# DESCRIBEs window + deferred; tests/test_gate_coverage.py fails if
+# any registered query is neither historically checked, in the
+# current window, nor in this list. tools/rotate_gate.py refills the
+# window once this list is empty.
 DEFERRED_TO_NEXT_ROUND = [
     # round-9 additions go here (gated round 10); budget =
     # 50 - len(NEXT_ROUND_SENTINELS) — see test_gate_coverage.

@@ -5,10 +5,10 @@ component) at corpus scale.
 Hybrid execution, size-gated like Spark's own broadcast-join
 threshold (r12, from the measured profile in docs/ROUND12_NOTES.md):
 
-- **Small graphs** (≤ ``SPARK_GRAFT_CC_LOCAL_MAX_EDGES`` edges,
-  default 500k ≈ tens of MB on the driver): collect the materialized
-  edge list and solve with path-compressing union-find, one job +
-  one collect instead of 2-4 distributed rounds. Near-dup graphs are
+- **Small graphs** (≤ ``_LOCAL_MAX_EDGES`` = 500k edges ≈ tens of
+  MB on the driver): collect the materialized edge list and solve
+  with path-compressing union-find, one job + one collect instead of
+  2-4 distributed rounds. Near-dup graphs are
   tiny relative to the corpus (LSH + verify leaves ~1% of docs in
   pairs), and each distributed round costs a localCheckpoint
   materialization (~1s of driver-round latency at any data size) —
@@ -29,15 +29,15 @@ Both paths emit identical results: (node, component = min reachable
 node id) for exactly the nodes appearing in the edge list, labels
 being min() reductions — deterministic, no ordering sensitivity.
 Equivalence is pinned by tests/test_components.py, which runs the
-union-find oracle against both paths (the distributed one forced via
-the gate env).
+union-find oracle against both paths (the distributed one forced by
+monkeypatching the gate constant).
 
 Both paths are measured either side of the gate
 (docs/BENCH_CC_DIST_r13.md, synthetic clique+chain graphs at
 100k/600k/2.4M edges): the distributed loop costs 2.41× at 600k and
 1.39× at 2.4M vs the union-find on local[32], the premium shrinking
 as per-round work amortizes the ~1s/round checkpoint latency. The
-500k default is therefore a DRIVER-STATE bound (like Spark's
+500k gate is therefore a DRIVER-STATE bound (like Spark's
 broadcast threshold), not a latency crossover — raising it buys
 single-node latency only by growing an unbounded driver collect in
 exactly the regime where a cluster must not fall over.
@@ -45,45 +45,27 @@ exactly the regime where a cluster must not fall over.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-from ecmm428_pycart_spark.datapipe.graph import _ckpt  # r14 lazy-ckpt lever (SPARK_GRAFT_GRAPH_LAZYCKPT_OFF)
+from ecmm428_pycart_spark.session import checkpoint
 
-_DEFAULT_LOCAL_MAX_EDGES = 500_000
-
-
-def _local_max_edges() -> int:
-    return int(os.environ.get("SPARK_GRAFT_CC_LOCAL_MAX_EDGES",
-                              _DEFAULT_LOCAL_MAX_EDGES))
+_LOCAL_MAX_EDGES = 500_000
 
 
 def connected_components(edges: DataFrame, src: str = "doc_a",
                          dst: str = "doc_b",
                          max_iter: int = 20) -> DataFrame:
     """(node, component) for every node in `edges`; component = min node
-    id reachable. Stops early when a round changes no label.
-
-    Set ``SPARK_GRAFT_CC_LOCAL_MAX_EDGES=0`` to force the distributed
-    loop at any size; ``SPARK_GRAFT_CC_LEGACY=1`` runs the pre-r12
-    always-distributed loop (the A side of tools/ab_components.py).
-    Results are identical on every path."""
-    if os.environ.get("SPARK_GRAFT_CC_LEGACY") == "1":
-        return _legacy_connected_components(edges, src, dst, max_iter)
+    id reachable. Stops early when a round changes no label. Results
+    are identical on both paths."""
     # materialize the (projected) edge list once — BOTH paths need it:
     # the gate needs its size, the local path collects it, and the
     # distributed path re-joins it every round while upstream it is
     # typically an expensive pipeline (minhash LSH + jaccard verify)
     # that must not re-execute
     pruned = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-              .transform(_ckpt))
-    # limit == 0 is the explicit force-distributed override: without the
-    # guard an EMPTY edge list (0 <= 0) would still take the local path
-    # (ADVICE r12), making the override a lie for the one graph size
-    # where both paths are trivially identical anyway.
-    limit = _local_max_edges()
-    if limit > 0 and pruned.count() <= limit:
+              .transform(checkpoint))
+    if pruned.count() <= _LOCAL_MAX_EDGES:
         return _local_union_find(pruned)
     return _distributed_cc(pruned, max_iter)
 
@@ -117,11 +99,11 @@ def _distributed_cc(pruned: DataFrame, max_iter: int) -> DataFrame:
            .unionByName(pruned.select(F.col("b").alias("a"),
                                       F.col("a").alias("b")))
            .distinct()
-           .transform(_ckpt))
+           .transform(checkpoint))
     labels = (sym.select(F.col("a").alias("node"))
               .distinct()
               .withColumn("label", F.col("node"))
-              .transform(_ckpt))
+              .transform(checkpoint))
     for it in range(max_iter):
         nb_min = (sym.join(labels.select("node", "label"),
                            sym["b"] == F.col("node"))
@@ -146,56 +128,11 @@ def _distributed_cc(pruned: DataFrame, max_iter: int) -> DataFrame:
                            F.least(F.col("label"),
                                    F.coalesce("p_label", F.col("label")))
                            .alias("label")))
-        new = _ckpt(stepped)
+        new = checkpoint(stepped)
         # old_label is already materialized alongside label, so this is
         # a count over the checkpoint — no join, no extra shuffle
         changed = new.filter(F.col("label") != F.col("old_label")).count()
         labels = new.select("node", "label")
         if changed == 0:
             break
-    return labels.select(F.col("node"), F.col("label").alias("component"))
-
-
-def _legacy_connected_components(edges: DataFrame, src: str, dst: str,
-                                 max_iter: int) -> DataFrame:
-    """The pre-r12 loop, kept verbatim as the A/B baseline arm: always
-    distributed, pointer jump every round, convergence probe as a
-    prev⋈new join every 2nd round."""
-    sym = (edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-           .unionByName(edges.select(F.col(dst).alias("a"),
-                                     F.col(src).alias("b")))
-           .distinct()
-           .localCheckpoint(eager=True))
-    labels = (sym.select(F.col("a").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node"))
-              .localCheckpoint(eager=True))
-    for it in range(max_iter):
-        nb_min = (sym.join(labels, sym["b"] == labels["node"])
-                  .groupBy(F.col("a").alias("node2"))
-                  .agg(F.min("label").alias("nb_label")))
-        stepped = (labels.join(nb_min, labels["node"] == nb_min["node2"],
-                               "left")
-                   .select("node",
-                           F.least(F.col("label"),
-                                   F.coalesce("nb_label", F.col("label")))
-                           .alias("label")))
-        parent = stepped.select(F.col("node").alias("p_node"),
-                                F.col("label").alias("p_label"))
-        new = (stepped.join(parent,
-                            stepped["label"] == parent["p_node"], "left")
-               .select("node",
-                       F.least(F.col("label"),
-                               F.coalesce("p_label", F.col("label")))
-                       .alias("label"))
-               .localCheckpoint(eager=True))
-        prev = labels
-        labels = new
-        if it % 2 == 1 or it == max_iter - 1:
-            changed = (new.alias("n")
-                       .join(prev.alias("o"), "node")
-                       .filter(F.col("n.label") != F.col("o.label"))
-                       .count())
-            if changed == 0:
-                break
     return labels.select(F.col("node"), F.col("label").alias("component"))

@@ -25,29 +25,9 @@ components.py — narrow shuffles on the node id, nothing quadratic.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, functions as F
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Plan-truncating localCheckpoint, LAZY by default (r14 "fewer
-    jobs" lever, same as plans/cartogram._ckpt and datapipe/kmeans):
-    eager=False compiles the physical plan and wraps the same
-    LogicalRDD — identical plans, identical lineage truncation — but
-    defers materialization, so loops with a per-round convergence
-    count (k-core peel, k-truss, cc_two_phase) run ONE job per round
-    instead of checkpoint-job + count-job, and fixed-round loops
-    (label propagation, personalized pagerank, HITS, walks) fold every
-    round into the caller's terminal action. per_node_triangles'
-    ``dire`` checkpoint stays EAGER: it feeds three subtrees of a
-    single job (e1/e2 self-join + the closing-edge probe), where
-    laziness could compute the subtree more than once concurrently.
-    ``SPARK_GRAFT_GRAPH_LAZYCKPT_OFF=1`` restores the eager jobs (the
-    A/B arm)."""
-    eager = os.environ.get("SPARK_GRAFT_GRAPH_LAZYCKPT_OFF") == "1"
-    return df.localCheckpoint(eager=eager)
-
+from ecmm428_pycart_spark.session import checkpoint
 
 
 def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
@@ -66,7 +46,7 @@ def k_core(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     if k < 1:
         raise ValueError("k_core requires k >= 1")
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .transform(_ckpt))
+         .transform(checkpoint))
     return _peel(e, k, max_rounds).select(
         F.col("src").alias("node")).distinct()
 
@@ -86,7 +66,7 @@ def _peel(e: DataFrame, k: int, max_rounds: int) -> DataFrame:
         e2 = (e.join(keep, "src", "left_semi")
               .join(keep.withColumnRenamed("src", "dst"), "dst",
                     "left_semi")
-              .transform(_ckpt))
+              .transform(checkpoint))
         n2 = e2.count()
         converged = n2 == 0 or n2 == n_edges
         e = e2
@@ -124,7 +104,7 @@ def core_numbers(edges: DataFrame, src: str = "src", dst: str = "dst",
     # G's k-core, so each iteration starts from the previous core's
     # surviving edges instead of re-peeling the full graph
     e = (edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-         .transform(_ckpt))
+         .transform(checkpoint))
     for k in range(1, k_max + 1):
         e = _peel(e, k, max_rounds)
         core = e.select(F.col("src").alias("node")).distinct()
@@ -265,7 +245,7 @@ def label_propagation(edges: DataFrame, labels: DataFrame,
                        F.col("_lab").alias("_new")))
         cur = (cur.join(nxt, "_k", "left")
                .select("_k", F.coalesce("_new", "_lab").alias("_lab"))
-               .transform(_ckpt))
+               .transform(checkpoint))
     return cur.select(F.col("_k").alias(node_col),
                       F.col("_lab").alias(label_col))
 
@@ -287,7 +267,7 @@ def bfs_layers(edges: DataFrame, sources: DataFrame, max_depth: int = 6,
     never Bellman-Ford's |V| rounds."""
     frontier = (sources.select(F.col(node_col).alias("_k")).distinct()
                 .withColumn("_d", F.lit(0)))
-    visited = frontier.transform(_ckpt)
+    visited = frontier.transform(checkpoint)
     frontier = visited
     for d in range(1, max_depth + 1):
         nxt = (frontier.join(
@@ -296,7 +276,7 @@ def bfs_layers(edges: DataFrame, sources: DataFrame, max_depth: int = 6,
                .select(F.col("_n").alias("_k")).distinct()
                .join(visited.select("_k"), "_k", "left_anti")
                .withColumn("_d", F.lit(d)))
-        visited = visited.unionByName(nxt).transform(_ckpt)
+        visited = visited.unionByName(nxt).transform(checkpoint)
         frontier = nxt
     return visited.select(F.col("_k").alias(node_col),
                           F.col("_d").alias("distance"))
@@ -393,7 +373,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
             .withColumn("_f", F.lit(1)))
     base = (nodes.join(flag, "_k", "left")
             .select("_k", F.coalesce("_f", F.lit(0)).alias("_seed"))
-            .transform(_ckpt))
+            .transform(checkpoint))
     restart = ((1_000_000 - alpha_ppm) * seed_mass) // 1_000_000
     cur = base.select(
         "_k", "_seed",
@@ -410,7 +390,7 @@ def personalized_pagerank(edges: DataFrame, seeds: DataFrame,
                        (F.expr(f"({alpha_ppm} * coalesce(_in, cast(0 as bigint))) div 1000000")
                         + F.col("_seed").cast("long") * F.lit(restart))
                        .alias("_r"))
-               .transform(_ckpt))
+               .transform(checkpoint))
     return cur.select(F.col("_k").alias(node_col),
                       F.col("_seed").cast("int").alias("is_seed"),
                       F.col("_r").cast("long").alias("rank"))
@@ -474,7 +454,7 @@ def bounded_shortest_paths(edges: DataFrame, sources: DataFrame,
                        F.col(weight_col).cast("long").alias("_w"))
     cur = (sources.select(F.col(node_col).alias("_k")).distinct()
            .withColumn("_d", F.lit(0).cast("long"))
-           .transform(_ckpt))
+           .transform(checkpoint))
     for _ in range(rounds):
         relaxed = (und.join(cur.withColumnRenamed("_k", "_a"), "_a")
                    .select(F.col("_b").alias("_k"),
@@ -482,7 +462,7 @@ def bounded_shortest_paths(edges: DataFrame, sources: DataFrame,
         cur = (cur.withColumnRenamed("_d", "_nd")
                .unionByName(relaxed)
                .groupBy("_k").agg(F.min("_nd").alias("_d"))
-               .transform(_ckpt))
+               .transform(checkpoint))
     return cur.select(F.col("_k").alias(node_col),
                       F.col("_d").alias("dist"))
 
@@ -509,7 +489,7 @@ def k_truss(edges: DataFrame, k: int = 4,
     cur = (edges.select(F.least(src, dst).alias("a"),
                         F.greatest(src, dst).alias("b"))
            .filter(F.col("a") < F.col("b")).distinct()
-           .transform(_ckpt))
+           .transform(checkpoint))
     n_prev = cur.count()
     for _ in range(max_rounds):
         und = (cur.select("a", "b")
@@ -526,7 +506,7 @@ def k_truss(edges: DataFrame, k: int = 4,
                 .agg(F.count(F.lit(1)).alias("_supp")))
         nxt = (cur.join(supp, ["a", "b"], "left")
                .filter(F.coalesce("_supp", F.lit(0)) >= k - 2)
-               .select("a", "b").transform(_ckpt))
+               .select("a", "b").transform(checkpoint))
         n = nxt.count()
         cur = nxt
         if n == n_prev:
@@ -556,7 +536,7 @@ def hash_random_walks(edges: DataFrame, seeds: DataFrame,
            .distinct()
            .withColumn("step", F.lit(0))
            .withColumn("node", F.col("walk_id"))
-           .transform(_ckpt))
+           .transform(checkpoint))
     cur = out
     for t in range(1, steps + 1):
         nxt = (cur.select("walk_id", F.col("node").alias("_u"))
@@ -573,7 +553,7 @@ def hash_random_walks(edges: DataFrame, seeds: DataFrame,
                .agg(F.min("_packed").alias("_m"))
                .select("walk_id", F.lit(t).alias("step"),
                        (F.col("_m") % 4194304).alias("node")))
-        cur = nxt.transform(_ckpt)
+        cur = nxt.transform(checkpoint)
         out = out.unionByName(cur)
     return out
 
@@ -602,7 +582,7 @@ def hits_scores(edges: DataFrame, rounds: int = 3,
     e = edges.select(F.col(src).alias("_a"), F.col(dst).alias("_b"))
     nodes = (e.select(F.col("_a").alias("_k"))
              .unionByName(e.select(F.col("_b").alias("_k")))
-             .distinct().transform(_ckpt))
+             .distinct().transform(checkpoint))
     hub = nodes.select("_k", F.lit(scale).cast("long").alias("_v"))
     auth = None
     for _ in range(rounds):
@@ -616,7 +596,7 @@ def hits_scores(edges: DataFrame, rounds: int = 3,
         amax = araw.agg(F.max("_raw").alias("_m"))
         auth = (araw.crossJoin(F.broadcast(amax))
                 .select("_k", F.expr(f"_raw * {scale} div _m")
-                        .alias("_v")).transform(_ckpt))
+                        .alias("_v")).transform(checkpoint))
         hraw = (nodes.join(
                     e.join(auth.select(F.col("_k").alias("_b"), "_v"),
                            "_b")
@@ -627,7 +607,7 @@ def hits_scores(edges: DataFrame, rounds: int = 3,
         hmax = hraw.agg(F.max("_raw").alias("_m"))
         hub = (hraw.crossJoin(F.broadcast(hmax))
                .select("_k", F.expr(f"_raw * {scale} div _m")
-                       .alias("_v")).transform(_ckpt))
+                       .alias("_v")).transform(checkpoint))
     return (nodes.join(auth.select(F.col("_k"),
                                    F.col("_v").alias("auth_ppm")),
                        "_k")
@@ -718,11 +698,11 @@ def cc_two_phase(edges: DataFrame, src: str = "src", dst: str = "dst",
                       F.greatest(F.col(src), F.col(dst)).alias("hi"))
          .filter(F.col("lo") < F.col("hi"))
          .distinct()
-         .transform(_ckpt))
+         .transform(checkpoint))
     all_nodes = (e.select(F.col("lo").alias("node"))
                  .union(e.select(F.col("hi").alias("node")))
                  .distinct()
-                 .transform(_ckpt))
+                 .transform(checkpoint))
 
     def _fingerprint(df: DataFrame):
         row = df.agg(
@@ -758,7 +738,7 @@ def cc_two_phase(edges: DataFrame, src: str = "src", dst: str = "dst",
                                    F.col("hi").alias("hi")))
               .filter(F.col("lo") < F.col("hi"))
               .distinct()
-              .transform(_ckpt))
+              .transform(checkpoint))
         fp2 = _fingerprint(e2)
         converged = fp2 == fp
         e, fp = e2, fp2

@@ -14,26 +14,9 @@ identically, which the tests rely on.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Plan-truncating localCheckpoint, LAZY by default (r14 "fewer
-    jobs" lever, same as plans/cartogram._ckpt): eager=False compiles
-    the physical plan and wraps the same LogicalRDD — identical plans,
-    identical lineage truncation — but defers materialization to the
-    caller's terminal action, so the one-blocking-job-per-iteration
-    cadence collapses into that action. Safe here because the loop is
-    a LINEAR chain (each checkpoint has exactly one downstream
-    consumer per job — the next iteration's broadcast), so laziness
-    cannot double-compute a subtree the way it could at a fan-out
-    (similarity.semdedup's ranked checkpoint stays eager for exactly
-    that reason). ``SPARK_GRAFT_KMEANS_LAZYCKPT_OFF=1`` restores the
-    eager per-iteration jobs (the A/B arm)."""
-    eager = os.environ.get("SPARK_GRAFT_KMEANS_LAZYCKPT_OFF") == "1"
-    return df.localCheckpoint(eager=eager)
+from ecmm428_pycart_spark.session import checkpoint
 
 
 def _assign(df: DataFrame, centroids: DataFrame, id_col: str,
@@ -76,11 +59,11 @@ def kmeans(df: DataFrame, k: int, iterations: int = 5,
                  .select((F.col("_rn") - 1).alias("cluster"),
                          F.transform(vec_col, lambda x: x.cast("double"))
                          .alias("centroid")))
-    centroids = _ckpt(centroids)
+    centroids = checkpoint(centroids)
     assigned = None
     for _ in range(iterations):
         assigned = _assign(df, centroids, id_col, vec_col)
-        centroids = _ckpt(_update(assigned, vec_col))
+        centroids = checkpoint(_update(assigned, vec_col))
     assigned = _assign(df, centroids, id_col, vec_col)
     return assigned.select(id_col, "cluster"), centroids
 
@@ -108,7 +91,7 @@ def kmeans_grouped(df: DataFrame, k: int, iterations: int = 5,
                          (F.col("_rn") - 1).alias("cluster"),
                          F.transform(vec_col, lambda x: x.cast("double"))
                          .alias("centroid")))
-    centroids = _ckpt(centroids)
+    centroids = checkpoint(centroids)
 
     def assign(cents):
         cent = cents.select(F.col(group_col).alias("_g"),
@@ -130,16 +113,16 @@ def kmeans_grouped(df: DataFrame, k: int, iterations: int = 5,
     assigned = None
     for _ in range(iterations):
         assigned = assign(centroids)
-        centroids = _ckpt(assigned
-                          .select(group_col, "cluster",
-                                  F.posexplode(vec_col).alias("pos", "val"))
-                          .groupBy(group_col, "cluster", "pos")
-                          .agg(F.avg(F.col("val").cast("double")).alias("m"))
-                          .groupBy(group_col, "cluster")
-                          .agg(F.array_sort(F.collect_list(
-                              F.struct("pos", "m"))).alias("_s"))
-                          .withColumn("centroid",
-                                      F.transform("_s", lambda s: s["m"]))
-                          .select(group_col, "cluster", "centroid"))
+        centroids = checkpoint(
+            assigned
+            .select(group_col, "cluster",
+                    F.posexplode(vec_col).alias("pos", "val"))
+            .groupBy(group_col, "cluster", "pos")
+            .agg(F.avg(F.col("val").cast("double")).alias("m"))
+            .groupBy(group_col, "cluster")
+            .agg(F.array_sort(F.collect_list(
+                F.struct("pos", "m"))).alias("_s"))
+            .withColumn("centroid", F.transform("_s", lambda s: s["m"]))
+            .select(group_col, "cluster", "centroid"))
     assigned = assign(centroids)
     return (assigned.select(group_col, id_col, "cluster"), centroids)

@@ -12,7 +12,7 @@ Protocol, owned by this module alone:
 
 - An entry lives at ``<root>/<family>_store/<name>``, ``<root>`` being
   ``SPARK_GRAFT_STORE_ROOT`` (default ``<repo>/out``) and ``<name>``
-  being ``v1_<algo>[-c<folded algo>]_<fingerprint>[_<kind>]``.
+  being ``v2_<algo>[-c<folded algo>]_<fingerprint>[_<kind>]``.
   ``<algo>`` hashes the source of the code that produces the rows, so
   editing a producer can never serve stale rows; ``<fingerprint>``
   digests the input content, so a regenerated input re-materializes.
@@ -21,11 +21,12 @@ Protocol, owned by this module alone:
   ``_SUCCESS`` marker, then renames the directory into place. A loser
   of a concurrent build race removes its tmp dir and serves the
   winner; a failed build removes its tmp dir and re-raises.
-- An entry is served only if every sub-table's ``_SUCCESS`` exists and
-  every file it lists has its recorded size; otherwise ``materialize``
-  raises ``IncompleteEntry`` instead of reading partial rows. (Entries
-  built before markers were sealed carry Spark's empty marker; they
-  are served on the marker alone.)
+- An entry is served only if every sub-table's ``_SUCCESS`` manifest
+  is non-empty, every file it lists has its recorded size, and the
+  sub-table holds no data file it does not list; otherwise
+  ``materialize`` raises ``IncompleteEntry`` instead of reading partial
+  or extra rows. (``v1`` entries, which could carry Spark's empty
+  marker, are dead under the ``v2`` layout.)
   ``tools/store_gc.py`` removes such entries, orphans left by code or
   key changes, and (with ``--tmp-too``) tmp dirs of dead builds.
 """
@@ -47,7 +48,7 @@ from pyspark.sql import functions as F
 # every family's tables are declared in datapipe/<family>_store.py;
 # tools/store_gc.py collects only the directories of these families
 FAMILIES = ("borders", "crawl", "band", "lm")
-_LAYOUT_VERSION = "v1"
+_LAYOUT_VERSION = "v2"
 _TABLES: list[Table] = []
 _FP_MEMO: dict[tuple[str, str], str] = {}
 
@@ -126,8 +127,14 @@ def write_clustered(df: DataFrame, path: str, n_files: int,
      .write.parquet(path))
 
 
+def _data_files(part_dir: str) -> list[str]:
+    """Every name in ``part_dir`` but Spark's ``.crc`` checksums and
+    ``_``-prefixed markers."""
+    return sorted(n for n in os.listdir(part_dir) if n[0] not in "._")
+
+
 def _seal(part_dir: str) -> None:
-    names = sorted(n for n in os.listdir(part_dir) if n[0] not in "._")
+    names = _data_files(part_dir)
     with open(os.path.join(part_dir, "_SUCCESS"), "w") as f:
         for n in names:
             f.write(f"{n}\t{os.path.getsize(os.path.join(part_dir, n))}\n")
@@ -137,16 +144,17 @@ def _seal(part_dir: str) -> None:
 
 
 def complete(path: str, parts: tuple[str, ...]) -> bool:
-    """Every sub-table has its ``_SUCCESS`` marker and every file the
-    marker lists has its recorded size. An empty marker is Spark's own,
-    left by entries built before markers were sealed: Spark writes it
-    only after the job commits, so the entry is whole but its sizes are
-    not on record."""
+    """Every sub-table has a non-empty ``_SUCCESS`` manifest, every file
+    it lists has its recorded size, and the sub-table holds no data
+    file it does not list (a stray part file would add rows)."""
     try:
         for part in parts:
             part_dir = os.path.join(path, part)
             with open(os.path.join(part_dir, "_SUCCESS")) as f:
                 listed = [line.split("\t") for line in f.read().splitlines()]
+            if not listed or sorted(n for n, _ in listed) != _data_files(
+                    part_dir):
+                return False
             for name, size in listed:
                 if os.path.getsize(os.path.join(part_dir, name)) != int(size):
                     return False
@@ -178,7 +186,8 @@ def materialize(table: Table, fingerprint: str,
             shutil.rmtree(tmp, ignore_errors=True)
     if not complete(final, table.parts):
         raise IncompleteEntry(
-            f"store entry {final} is incomplete (missing _SUCCESS or a "
-            f"file of the wrong size); remove it with "
+            f"store entry {final} is incomplete (missing or empty "
+            f"_SUCCESS, or a file missing, unlisted or of the wrong "
+            f"size); remove it with "
             f"`python tools/store_gc.py --apply` and rerun")
     return final

@@ -9,22 +9,9 @@ and at most one shuffle for the lang-id argmax.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Plan-truncating localCheckpoint, LAZY by default (r14 "fewer
-    jobs" lever, same as kmeans/graph/cartogram): identical compiled
-    plans and lineage truncation, materialization deferred to the next
-    action. In ``learn_bpe_merges`` the next round's argmax collect is
-    that action (the cadence checkpoint job folds into it); in
-    ``bpe_encode`` the whole fold chain folds into the caller's
-    terminal action. ``SPARK_GRAFT_TEXT_LAZYCKPT_OFF=1`` restores the
-    eager jobs (the A/B arm)."""
-    eager = os.environ.get("SPARK_GRAFT_TEXT_LAZYCKPT_OFF") == "1"
-    return df.localCheckpoint(eager=eager)
+from ecmm428_pycart_spark.session import checkpoint
 
 
 # Small function-word lists per language for the n-gram/stopword heuristic.
@@ -511,7 +498,7 @@ def learn_bpe_merges(df: DataFrame, n_merges: int = 16,
     chars = F.transform(
         F.sequence(F.lit(1), F.length("word")),
         lambda i: F.col("word").substr(i, F.lit(1)))
-    vocab = _ckpt(words.withColumn(
+    vocab = checkpoint(words.withColumn(
         "syms", F.concat(chars, F.array(F.lit(end_token)))))
     merges: list[tuple[str, str]] = []
     pending = 0
@@ -532,14 +519,14 @@ def learn_bpe_merges(df: DataFrame, n_merges: int = 16,
             "syms", _bpe_merge_pair(F.col("syms"), a, b))
         pending += 1
         if pending >= max(1, checkpoint_every):
-            vocab = _ckpt(vocab)
+            vocab = checkpoint(vocab)
             pending = 0
     if pending:
         # ADVICE r13: without this, a non-multiple n_merges (or an early
         # min_freq break) returned a vocab carrying up to
         # checkpoint_every-1 unmaterialized merge-fold layers, which any
         # multi-action caller would replay per action.
-        vocab = _ckpt(vocab)
+        vocab = checkpoint(vocab)
     return merges, vocab
 
 
@@ -643,7 +630,7 @@ def bpe_encode(df: DataFrame, merges, id_col: str = "doc_id",
     for i, (a, b) in enumerate(merges):
         enc = enc.withColumn("syms", _bpe_merge_pair(F.col("syms"), a, b))
         if (i + 1) % checkpoint_every == 0:
-            enc = _ckpt(enc)
+            enc = checkpoint(enc)
     assembled = (word_stream.join(enc, "word")
                  .groupBy(id_col)
                  .agg(F.flatten(F.transform(

@@ -51,17 +51,7 @@ from ecmm428_pycart_spark.geometry.udfs import (
 from ecmm428_pycart_spark.operators.borders import (get_borders, region_index,
                                                     with_region_idx)
 from ecmm428_pycart_spark.plans import dorling_core
-
-
-def _ckpt(df: DataFrame) -> DataFrame:
-    """Plan-truncating lazy localCheckpoint: the physical plan is
-    compiled and its (persisted) RDD wrapped exactly as an eager
-    checkpoint would, so the plan stays O(1) deep across Jacobi
-    exchanges, but nothing runs until the query's terminal action,
-    whose stages read each intermediate from the persist-on-first-
-    compute cache. One job where an eager checkpoint per set-up stage
-    and per exchange would each block the driver."""
-    return df.localCheckpoint(eager=False)
+from ecmm428_pycart_spark.session import checkpoint
 
 
 # exact sum type for the radius calibration: 20 integer digits, 18
@@ -130,9 +120,9 @@ class Cartogram:
         once per region, not once per branch.
         """
         v, i, g = self.value_field, self.id_field, self.geo_field
-        geodf = _ckpt(self.df.select(v, i, g)
-                      .withColumn("_area", st_area(F.col(g)))
-                      .withColumn("density", F.col(v) / F.col("_area")))
+        geodf = checkpoint(self.df.select(v, i, g)
+                           .withColumn("_area", st_area(F.col(g)))
+                           .withColumn("density", F.col(v) / F.col("_area")))
         anchor = geodf.agg(F.max("density").alias("_anchor"))
         return (
             geodf.crossJoin(F.broadcast(anchor))
@@ -172,14 +162,15 @@ class Cartogram:
         # re-execute the upstream plan (often ingest UDFs) — materialize
         # once so every branch reads the checkpointed partitions.
         # dict.fromkeys dedupes when id_field == idx_field == "region_idx".
-        base = _ckpt(base.select(*dict.fromkeys([v, i, g, "region_idx"])))
+        base = checkpoint(
+            base.select(*dict.fromkeys([v, i, g, "region_idx"])))
         if self._borders is not None:
             borders = self._borders
         else:
             borders, _islands = get_borders(base, i, g,
                                             idx_field="region_idx")
         if scalable and self._borders is None:
-            borders = _ckpt(borders)
+            borders = checkpoint(borders)
 
         regions = centroid_cols(base, geom_col=g, prefix="c")
         regions = regions.withColumn("perimeter", st_perimeter(F.col(g)))
@@ -332,7 +323,7 @@ class Cartogram:
         two array columns, attached once here (measured faster than
         sending edge rows through each exchange), and so do its id and
         value, on owned rows only, so nothing is joined back after the
-        loop. The lazy localCheckpoint per exchange (``_ckpt``) keeps
+        loop. The lazy checkpoint per exchange (``session.checkpoint``) keeps
         the plan O(1) deep.
         """
         nparts = int(state.sparkSession.conf.get(
@@ -350,14 +341,14 @@ class Cartogram:
             F.struct(F.col("neighbor").cast("long").alias("neighbor"),
                      F.col("weight").cast("double").alias("weight"))
             .alias("_e")))
-        cur = _ckpt(rows.groupBy("region_idx")
-                    .agg(*[F.first(c, ignorenulls=True).alias(c)
-                           for c in cols],
-                         F.collect_list("_e").alias("_e"))
-                    .filter(F.col("cx").isNotNull())
-                    .select("region_idx", *cols,
-                            F.col("_e.neighbor").alias("_nb"),
-                            F.col("_e.weight").alias("_wt")))
+        cur = checkpoint(rows.groupBy("region_idx")
+                         .agg(*[F.first(c, ignorenulls=True).alias(c)
+                                for c in cols],
+                              F.collect_list("_e").alias("_e"))
+                         .filter(F.col("cx").isNotNull())
+                         .select("region_idx", *cols,
+                                 F.col("_e.neighbor").alias("_nb"),
+                                 F.col("_e.weight").alias("_wt")))
         schema = cur.schema
 
         def stepper(k):
@@ -380,9 +371,9 @@ class Cartogram:
         while left > 0:
             k = min(left, K_MAX)
             side = dorling_core.halo_reach(k, ratio, friction, widest)[0]
-            cur = _ckpt(cur.select(_halo(schema, side, nparts))
-                        .groupBy("_bucket")
-                        .applyInPandas(stepper(k), schema))
+            cur = checkpoint(cur.select(_halo(schema, side, nparts))
+                             .groupBy("_bucket")
+                             .applyInPandas(stepper(k), schema))
             left -= k
         return cur
 

@@ -131,8 +131,6 @@ def spread_small(df, max_tasks=None):
     the input unchanged (no shuffle added); the shuffle it does add
     locally moves only the projected input columns. The target follows
     the session's core count (SPARK_GRAFT_CPUS), not a constant.
-    ``SPARK_GRAFT_SPREAD_OFF=1`` restores the pre-r13 single-task plans
-    (the A/B fresh arm).
 
     ``max_tasks`` caps the spread degree BELOW the session parallelism
     (VERDICT r13 next-1): for a tiny input whose per-task work is an
@@ -140,12 +138,10 @@ def spread_small(df, max_tasks=None):
     the host's pathological many-thread scheduling regime (the driver
     recorded m12 at 30.2s@32c on 5000 rows / 32 workers) while buying
     nothing once every task already holds >~100 ms of kernel work
-    (tools/ab_m12_r14.py: cap-8 == full spread at 8 AND 32 cores). The
-    cap only ever LOWERS the added local shuffle's width; the
+    (OPTIMIZATION_r14.md's m12 A/B: cap-8 == full spread at 8 AND 32
+    cores). The cap only ever LOWERS the added local shuffle's width; the
     production no-op property is unchanged (a scan with >= parallelism
     partitions returns unmodified before the cap is even consulted)."""
-    if os.environ.get("SPARK_GRAFT_SPREAD_OFF") == "1":
-        return df
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
@@ -168,24 +164,27 @@ def spread_cpu(df):
     columns — for a candidate-pair stream, two ids per row — while the
     stage it feeds does hundreds of array ops per row, so the shuffle
     stays amortized at any scale. Use ``spread_small`` for scan-level
-    inputs instead; same ``SPARK_GRAFT_SPREAD_OFF=1`` escape (A/B
-    arm)."""
-    if os.environ.get("SPARK_GRAFT_SPREAD_OFF") == "1":
-        return df
+    inputs instead."""
     return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
-def lazy_ckpt(df):
-    """Query-level plan-truncating localCheckpoint, LAZY by default
-    (r14 "fewer jobs" lever; the query-builder sibling of the
-    kmeans/graph/text/cartogram module helpers). Use ONLY where some
-    interleaved driver action (a gate count, a calibration collect)
-    materializes the frame before its fan-out consumers execute —
-    laziness then saves the blocking checkpoint job without any
-    double-compute window. ``SPARK_GRAFT_QUERY_LAZYCKPT_OFF=1``
-    restores the eager job (the A/B arm)."""
-    eager = os.environ.get("SPARK_GRAFT_QUERY_LAZYCKPT_OFF") == "1"
-    return df.localCheckpoint(eager=eager)
+def checkpoint(df):
+    """The package's one plan-truncating checkpoint: a LAZY
+    ``localCheckpoint``. An iterative driver loop (Dorling exchanges,
+    k-means, graph rounds, BPE merges) calls it once per step so the
+    plan stays flat; being lazy, it compiles into the step's next
+    consuming job instead of running a blocking job of its own, so
+    each step costs one job fewer and no row changes.
+
+    The rule: a checkpoint is lazy, and it is eager
+    (``df.localCheckpoint(eager=True)``, written inline with a comment
+    naming its consumers) only where one job fans out to several
+    consumers of the subtree, so the subtree runs once, in its own job,
+    before any of them reads it. At ``graph.per_node_triangles`` the
+    input is read as often with a lazy checkpoint as with the eager
+    one (its read-count test passes either way), so the eagerness
+    there is a precaution, not a measured need."""
+    return df.localCheckpoint(eager=False)
 
 
 def scratch_dir(prefix: str) -> str:

@@ -8,9 +8,9 @@ self-loops, singleton components, pre-collapsed cliques, long paths
 (forces pointer-jump rounds), dumbbells, and randomized graphs.
 
 Every case runs on BOTH execution paths: the default size-gated
-driver union-find AND the distributed pointer-jump loop (forced via
-``SPARK_GRAFT_CC_LOCAL_MAX_EDGES=0``) — the hybrid's two arms must be
-indistinguishable.
+driver union-find AND the distributed pointer-jump loop (forced by
+setting the gate ``components._LOCAL_MAX_EDGES`` below every edge
+count) — the hybrid's two arms must be indistinguishable.
 """
 
 from __future__ import annotations
@@ -20,17 +20,15 @@ import random
 import pytest
 from pyspark.sql import Row
 
+from ecmm428_pycart_spark.datapipe import components
 from ecmm428_pycart_spark.datapipe.components import connected_components
 
 
 @pytest.fixture(params=["local", "distributed"])
 def cc_path(request, monkeypatch):
     if request.param == "distributed":
-        monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "0")
-    else:
-        monkeypatch.delenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES",
-                           raising=False)
-    monkeypatch.delenv("SPARK_GRAFT_CC_LEGACY", raising=False)
+        # no edge count is <= -1, the empty graph's included
+        monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", -1)
     return request.param
 
 
@@ -142,14 +140,13 @@ def test_cc_string_node_ids(spark, cc_path):
 def test_cc_gate_boundary_switches_paths(spark, monkeypatch):
     # threshold == edge count -> local path; one below -> distributed.
     # Same labels either side of the boundary (the hybrid contract).
-    from ecmm428_pycart_spark.datapipe import components as comp
-
     edges = [(1, 2), (2, 3), (4, 5)]
     df = spark.createDataFrame([Row(doc_a=a, doc_b=b) for a, b in edges])
     want = {1: 1, 2: 1, 3: 1, 4: 4, 5: 4}
 
     calls = {"local": 0, "dist": 0}
-    real_local, real_dist = comp._local_union_find, comp._distributed_cc
+    real_local = components._local_union_find
+    real_dist = components._distributed_cc
 
     def spy_local(pruned):
         calls["local"] += 1
@@ -159,15 +156,15 @@ def test_cc_gate_boundary_switches_paths(spark, monkeypatch):
         calls["dist"] += 1
         return real_dist(pruned, max_iter)
 
-    monkeypatch.setattr(comp, "_local_union_find", spy_local)
-    monkeypatch.setattr(comp, "_distributed_cc", spy_dist)
+    monkeypatch.setattr(components, "_local_union_find", spy_local)
+    monkeypatch.setattr(components, "_distributed_cc", spy_dist)
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "3")
+    monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", 3)
     got = {r.node: r.component
-           for r in comp.connected_components(df).collect()}
+           for r in connected_components(df).collect()}
     assert got == want and calls == {"local": 1, "dist": 0}
 
-    monkeypatch.setenv("SPARK_GRAFT_CC_LOCAL_MAX_EDGES", "2")
+    monkeypatch.setattr(components, "_LOCAL_MAX_EDGES", 2)
     got = {r.node: r.component
-           for r in comp.connected_components(df).collect()}
+           for r in connected_components(df).collect()}
     assert got == want and calls == {"local": 1, "dist": 1}

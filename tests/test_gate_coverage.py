@@ -186,8 +186,8 @@ def test_window_is_the_evidence_freshness_rotation():
     if DEFERRED_TO_NEXT_ROUND:
         return  # registration backlog mode: older contract applies
 
-    from tools.apply_round10 import SENTINELS as ROT_SENTINELS
-    from tools.apply_round10 import stalest_names
+    from tools.rotate_gate import SENTINELS as ROT_SENTINELS
+    from tools.rotate_gate import stalest_names
 
     window = _window()
     computed = ROT_SENTINELS + stalest_names(GATE_CAP - len(ROT_SENTINELS))
@@ -208,5 +208,5 @@ def test_window_is_the_evidence_freshness_rotation():
     assert not laggards, (
         "DRIVER_WINDOW matches neither the computed evidence-freshness "
         f"rotation nor an executed gate: {laggards} lack a passing row "
-        f"from round {newest} — re-run tools/apply_round*.py or "
+        f"from round {newest} — re-run tools/rotate_gate.py or "
         "investigate failed gate rows")

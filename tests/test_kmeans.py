@@ -112,43 +112,37 @@ def test_kmeans_grouped_matches_per_group_loop(spark):
         assert got_cents == want_cents, f"group {g} centroids differ"
 
 
-def test_kmeans_lazy_checkpoints_match_eager_and_run_fewer_jobs(
-        spark, monkeypatch):
-    """r14 "fewer jobs" lever (datapipe/kmeans._ckpt): lazy
-    localCheckpoints compile the identical plans but defer
-    materialization to the terminal action, folding the per-iteration
-    blocking jobs into it. Assignments AND centroids must be
-    bit-identical to the eager path (every k-means op is deterministic:
-    fixed init, round(d2,9)+id tie-break, exact means), and the lazy
-    path must run strictly fewer Spark jobs."""
+def test_kmeans_rows_and_job_count_pinned(spark):
+    """Absolute pin on the Spark jobs of one k-means call plus the
+    collect of its assignments and centroids, read through a job
+    group. Every loop checkpoint is lazy (``session.checkpoint``), so
+    each folds into the job that next reads it: 16 jobs, the same on
+    every run measured; eager checkpoints ran 20. Rows against the
+    local numpy Lloyd's (same init, rounding and tie-break) and
+    against the engine's own centroids."""
     from pyspark.sql import functions as F
 
-    from ecmm428_pycart_spark.datapipe.kmeans import kmeans
-    from ecmm428_pycart_spark.session import load_table
-
-    emb = (load_table(spark, "/root/testdata/sf0.001", "embeddings")
+    emb = (load_table(spark, SF, "embeddings")
            .select("vec_id", F.slice("embedding", 1, 8).alias("embedding")))
+    rows = sorted(emb.collect(), key=lambda r: r["vec_id"])
+    vecs = np.asarray([r["embedding"] for r in rows], dtype="f4")
 
-    def run(tag, eager_off):
-        if eager_off:
-            monkeypatch.setenv("SPARK_GRAFT_KMEANS_LAZYCKPT_OFF", "1")
-        else:
-            monkeypatch.delenv("SPARK_GRAFT_KMEANS_LAZYCKPT_OFF",
-                               raising=False)
-        sc = spark.sparkContext
-        sc.setJobGroup(tag, tag)
-        try:
-            assigned, cents = kmeans(emb, k=4, iterations=3)
-            rows = sorted(tuple(r) for r in assigned.collect())
-            crows = sorted((r["cluster"], tuple(r["centroid"]))
-                           for r in cents.collect())
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return rows, crows, len(sc.statusTracker().getJobIdsForGroup(tag))
+    sc = spark.sparkContext
+    tag = "kmeans-jobs"
+    sc.setJobGroup(tag, tag)
+    try:
+        assigned, cents = kmeans(emb, k=4, iterations=3)
+        got = {r["vec_id"]: r["cluster"] for r in assigned.collect()}
+        cents = {r["cluster"]: np.asarray(r["centroid"])
+                 for r in cents.collect()}
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(tag)) == 16
 
-    lrows, lcents, ljobs = run("kmeans-arm-lazy", eager_off=False)
-    erows, ecents, ejobs = run("kmeans-arm-eager", eager_off=True)
-    assert lrows == erows          # exact: integer ids + deterministic argmin
-    assert lcents == ecents        # exact: same float accumulation order
-    assert ljobs < ejobs, (
-        f"lazy kmeans must run fewer jobs ({ljobs} vs {ejobs})")
+    want = _local_kmeans(vecs, 4, 2)    # 3 updates + the final assign
+    assert got == {r["vec_id"]: int(c) for r, c in zip(rows, want)}
+    for i, r in enumerate(rows):
+        v = vecs[i].astype("f8")
+        d2 = {c: float(((v - cv) ** 2).sum()) for c, cv in cents.items()}
+        assert got[r["vec_id"]] == min(sorted(d2),
+                                       key=lambda c: (round(d2[c], 9), c))

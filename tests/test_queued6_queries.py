@@ -54,7 +54,7 @@ def test_queued6_is_fully_registered():
     deferred backlog): every queued6.py entry must appear in the
     registry, or it would silently fall outside the 2-round gate
     rotation. (Round 5 asserted the inverse — the queue stayed OUT
-    until apply_round6 freed the budget.)"""
+    until the round-6 rotation freed the budget.)"""
     from ecmm428_pycart_spark.benchmarks import queued6
     from ecmm428_pycart_spark.benchmarks.registry import get_queries
     missing = set(queued6.QUERIES) - set(get_queries())

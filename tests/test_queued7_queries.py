@@ -54,7 +54,7 @@ def test_queued7_is_fully_registered():
     deferred backlog): every queued7.py entry must appear in the
     registry, or it would silently fall outside the 2-round gate
     rotation. (Round 6 asserted the inverse — the queue stayed OUT
-    until apply_round7 freed the budget.)"""
+    until the round-7 rotation freed the budget.)"""
     from ecmm428_pycart_spark.benchmarks import queued7
     from ecmm428_pycart_spark.benchmarks.registry import get_queries
     missing = set(queued7.QUERIES) - set(get_queries())

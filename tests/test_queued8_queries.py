@@ -54,7 +54,7 @@ def test_queued8_is_fully_registered():
     deferred backlog): every queued8.py entry must appear in the
     registry, or it would silently fall outside the 2-round gate
     rotation. (Round 7 asserted the inverse — the queue stayed OUT
-    until apply_round8 freed the budget.)"""
+    until the round-8 rotation freed the budget.)"""
     from ecmm428_pycart_spark.benchmarks import queued8
     from ecmm428_pycart_spark.benchmarks.registry import get_queries
     missing = set(queued8.QUERIES) - set(get_queries())

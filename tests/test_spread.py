@@ -7,7 +7,7 @@ task regardless of core count. The helper must (a) raise the partition
 count of under-parallel frames to the session's default parallelism,
 (b) leave already-parallel frames untouched (the production no-op), and
 (c) be a pure row-preserving materialization knob — results identical
-with it on, off, or env-disabled.
+with it on or replaced by the identity.
 """
 
 from __future__ import annotations
@@ -37,16 +37,23 @@ def test_spread_is_noop_when_already_parallel(spark):
     assert out is df
 
 
-def test_spread_env_kill_switch(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_OFF", "1")
-    df = spark.createDataFrame([Row(i=1)]).coalesce(1)
-    assert spread_small(df) is df
+def _grab_unspread(monkeypatch, grab):
+    """``grab()`` with both spread helpers replaced by the identity —
+    the pre-r13b plans. The callers import them at call time, so
+    patching the session module reaches them."""
+    from ecmm428_pycart_spark import session
+
+    with monkeypatch.context() as m:
+        m.setattr(session, "spread_small", lambda df, max_tasks=None: df)
+        m.setattr(session, "spread_cpu", lambda df: df)
+        return grab()
 
 
 def test_winnow_pairs_identical_with_and_without_spread(spark,
                                                         monkeypatch):
     """The d60 lever is a pure materialization change: pair output must
-    be identical with spreading disabled (the pre-r13b plan)."""
+    be identical with spreading replaced by the identity (the pre-r13b
+    plan)."""
     from ecmm428_pycart_spark.datapipe.dedup import winnow_dup_pairs
     # 8 groups of 5 near-identical docs: within a group the long shared
     # body yields shared fingerprints with document frequency 5 (under
@@ -62,9 +69,7 @@ def test_winnow_pairs_identical_with_and_without_spread(spark,
     def grab():
         return sorted(map(tuple, winnow_dup_pairs(df).collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_OFF", "1")
-    off = grab()
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_OFF")
+    off = _grab_unspread(monkeypatch, grab)
     on = grab()
     assert off == on
     assert off  # non-vacuous: the fixture must produce pairs
@@ -74,8 +79,8 @@ def test_jaccard_pairs_identical_with_and_without_spread(spark,
                                                          monkeypatch):
     """The verify-stage spread (session.spread_cpu inside
     dedup.jaccard_pairs) is a pure materialization change: verified
-    pair output must be identical with spreading disabled (the
-    pre-r13b plan)."""
+    pair output must be identical with spreading replaced by the
+    identity (the pre-r13b plan)."""
     from ecmm428_pycart_spark.datapipe.dedup import jaccard_pairs
     docs = spark.createDataFrame(
         [Row(doc_id=i,
@@ -89,9 +94,7 @@ def test_jaccard_pairs_identical_with_and_without_spread(spark,
         return sorted(map(tuple, jaccard_pairs(docs, pairs,
                                                threshold=0.5).collect()))
 
-    monkeypatch.setenv("SPARK_GRAFT_SPREAD_OFF", "1")
-    off = grab()
-    monkeypatch.delenv("SPARK_GRAFT_SPREAD_OFF")
+    off = _grab_unspread(monkeypatch, grab)
     on = grab()
     assert off == on
     assert off  # non-vacuous: same-tail docs share 7 of 8 shingles

@@ -4,10 +4,10 @@ tiny ``spark.range`` family.
 Every derived-table family (borders, crawl, band, lm) goes through
 ``store.materialize``, so its serving rule is pinned here once: an
 entry builds once, a leftover tmp dir never stands in for it, an
-entry with a missing marker or a truncated file raises instead of
-serving partial rows, a changed source list rebuilds under a new
-name, a lost rename race serves the winner, and a failed build leaves
-no tmp dir behind.
+entry with a missing or empty marker, a truncated file or an unlisted
+part file raises instead of serving partial or extra rows, a changed
+source list rebuilds under a new name, a lost rename race serves the
+winner, and a failed build leaves no tmp dir behind.
 """
 
 import os
@@ -79,13 +79,30 @@ def test_missing_success_marker_raises(spark, root):
     assert len(builds) == 1  # neither served nor silently rebuilt
 
 
-def test_spark_marker_entry_is_served(spark, root):
-    # entries built before markers were sealed carry Spark's own empty
-    # _SUCCESS (written only after the job commits): whole, unverified
+def test_empty_marker_raises(spark, root):
+    # Spark's own empty _SUCCESS lists nothing, so it vouches for nothing
     table, builds = _table(), []
     path = _materialize(spark, table, builds)
     open(os.path.join(path, "_SUCCESS"), "w").close()
-    assert _materialize(spark, table, builds) == path and len(builds) == 1
+    with pytest.raises(store.IncompleteEntry):
+        _materialize(spark, table, builds)
+    assert len(builds) == 1
+
+
+def test_unlisted_part_file_raises(spark, root):
+    # a stray part file the manifest does not list would add its rows;
+    # Spark's .crc checksums and _-prefixed files are not data
+    table, builds = _table(), []
+    path = _materialize(spark, table, builds)
+    open(os.path.join(path, "._SUCCESS.crc"), "w").close()
+    open(os.path.join(path, "_committed_0"), "w").close()
+    assert _materialize(spark, table, builds) == path
+    part = sorted(n for n in os.listdir(path) if n.startswith("part-"))[0]
+    shutil.copy(os.path.join(path, part),
+                os.path.join(path, "part-99999-stray.parquet"))
+    with pytest.raises(store.IncompleteEntry):
+        _materialize(spark, table, builds)
+    assert len(builds) == 1
 
 
 def test_truncated_part_file_raises_and_serves_no_rows(spark, root):

@@ -36,12 +36,10 @@ def test_gc_keeps_live_prefixes_and_removes_orphans(tmp_path):
     live = [
         _entry(borders / obs.CUSTOMER.entry("c9_0_8_ffff")),
         # the orders grid (g14) shares the borders directory
-        _entry(borders / f"v1_{obs.ORDERS.algo}_o9_0_8_ffff"),
+        _entry(borders / obs.ORDERS.entry("o9_0_8_ffff")),
         _entry(crawl / cs.TABLES["html"].entry("d9_0_8_eeee")),
         _entry(band / bs.TABLES["documents"].entry("d9_0_8_dddd")),
-        _entry(band / f"v1_{bs.TABLES['documents'].algo}"
-                      f"-c{cs.TABLES['html'].algo}_d9_0_8_dddd"
-                      f"_bands_crawl_html"),
+        _entry(band / bs.TABLES["crawl_html"].entry("d9_0_8_dddd")),
     ]
     for v in ls.TABLES:  # two sub-tables, each with its own marker
         entry = lm / ls.TABLES[v].entry("d9_0_8_cccc")
@@ -52,6 +50,8 @@ def test_gc_keeps_live_prefixes_and_removes_orphans(tmp_path):
         _entry(crawl / "v1_000000000000_d9_0_8_x_html"),
         _entry(band / "v0_stale_d9_0_8_x_bands_documents"),
         _entry(lm / "v1_000000000000_d9_0_8_x_lm_documents"),
+        # the current code's entry under the previous layout version
+        _entry(borders / ("v1" + obs.CUSTOMER.entry("c9_0_8_ffff")[2:])),
     ]
     incomplete = [
         _entry(crawl / cs.TABLES["links"].entry("d9_0_8_eeee"),

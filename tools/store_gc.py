@@ -1,16 +1,17 @@
 """Garbage-collect derived-table store entries that can never be served.
 
-Every entry name starts with ``v1_<algo>_`` (``datapipe/store.py``),
-the hash of its producing code, so editing a producer or changing a
-key orphans the old entries. An entry is LIVE iff some declared table
+Every entry name starts with ``v2_<algo>_`` (``datapipe/store.py``),
+the layout version and the hash of its producing code, so editing a
+producer, changing a key or bumping the layout orphans the old
+entries. An entry is LIVE iff some declared table
 (``store.tables()``, the same table ``store.materialize`` hashes) owns
 its name and the entry is complete; entries of other fingerprints are
 kept, since other inputs legitimately have other fingerprints. Entries
-with a live name but a missing ``_SUCCESS`` or a file of the wrong size
-are INCOMPLETE: ``materialize`` refuses them, and removing them lets
-the next call rebuild. ``.tmp.`` directories are in-flight builds; they
-are removed only with ``--tmp-too`` (safe on a quiescent host, not
-while a build runs).
+with a live name but a missing or empty ``_SUCCESS``, or a file that is
+missing, unlisted or of the wrong size, are INCOMPLETE: ``materialize``
+refuses them, and removing them lets the next call rebuild. ``.tmp.``
+directories are in-flight builds; they are removed only with
+``--tmp-too`` (safe on a quiescent host, not while a build runs).
 
 Dry-run by default; pass ``--apply`` to delete.
 
